@@ -1,0 +1,5 @@
+"""The engine's benchmark: seeded workloads, oracle check, traced run.
+
+Run ``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
+--trace <0|1>`` from the repository root; see ``perfbench/README.md``.
+"""
