@@ -1140,7 +1140,7 @@ class AnnFrame:
 
     def neighbors_nnd(self, k: int, rounds: int = 2, build_width: int | None = None) -> DataFrame:
         """Graph-based approximate kNN on the object API — the
-        ``sc_nnd_edges`` NN-descent shape over this frame's ``X``: ring
+        ``sc_nnd_edges`` NN-descent kernel over this frame's ``X``: ring
         seed, then ``rounds`` of symmetrize → co-neighbor closure → exact
         re-score → keep top-``build_width``, emitting the top-``k``
         (build wider than you emit — the measured recall lever, SCALE.md
@@ -1149,73 +1149,11 @@ class AnnFrame:
         size, with no index structure.  Dense 0..n-1 row ids give the
         standard ring seed; gaps merely thin the seed (missing ring
         targets drop in the scoring join), they do not error."""
-        from .session import materialize
+        from .operators.singlecell import nnd_vectors, sc_nnd_edges
 
         bw = build_width if build_width is not None else max(k, (4 * k + 2) // 3)
-        n = self.x.count()
-        a = materialize(
-            self.x.select(
-                F.col("row_id").alias("vec_id"),
-                F.col("values").alias("ea"),
-                F.aggregate(
-                    F.transform("values", lambda x: x * x),
-                    F.lit(0.0),
-                    lambda acc, t: acc + t,
-                ).alias("na"),
-            )
-        )
-        b = a.select(
-            F.col("vec_id").alias("nbr"),
-            F.col("ea").alias("eb"),
-            F.col("na").alias("nb"),
-        )
-        dot = F.aggregate(
-            F.zip_with("ea", "eb", lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
-        d2 = F.round(F.col("na") + F.col("nb") - 2 * dot, 6)
-
-        def score(pairs: DataFrame) -> DataFrame:
-            scored = pairs.join(a, "vec_id").join(b, "nbr").select(
-                "vec_id", "nbr", d2.alias("d2")
-            )
-            rk = F.row_number().over(
-                W.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("nbr"))
-            )
-            return scored.withColumn("rk", rk.cast("bigint")).where(
-                F.col("rk") <= bw
-            )
-
-        # .distinct(): when bw >= n the ring wraps and (vec_id+j) % n
-        # repeats targets — without dedup the duplicate (vec_id, nbr)
-        # pairs survive scoring as duplicate edges on consecutive ranks,
-        # eating top-k slots (r14 advice; the refinement rounds already
-        # dedup their candidate sets the same way).
-        seed = (
-            a.select(
-                "vec_id", F.explode(F.sequence(F.lit(1), F.lit(bw))).alias("j")
-            )
-            .select("vec_id", ((F.col("vec_id") + F.col("j")) % n).alias("nbr"))
-            .where(F.col("nbr") != F.col("vec_id"))
-            .distinct()
-        )
-        g = materialize(score(seed))
-        for _ in range(rounds):
-            u = materialize(
-                g.select("vec_id", "nbr")
-                .union(
-                    g.select(F.col("nbr").alias("vec_id"), F.col("vec_id").alias("nbr"))
-                )
-                .distinct()
-            )
-            hop = (
-                u.alias("x")
-                .join(u.alias("y"), F.col("x.nbr") == F.col("y.vec_id"))
-                .select(F.col("x.vec_id").alias("vec_id"), F.col("y.nbr").alias("nbr"))
-                .where(F.col("vec_id") != F.col("nbr"))
-            )
-            g = materialize(score(u.union(hop).distinct()))
+        vecs = self.x.select(F.col("row_id").alias("vec_id"), F.col("values").alias("embedding"))
+        g = sc_nnd_edges(nnd_vectors(vecs), rounds=rounds, k=bw)
         return g.where(F.col("rk") <= k).select(
             F.col("vec_id").alias("row_id"), "nbr", "d2", "rk"
         )

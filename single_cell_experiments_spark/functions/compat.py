@@ -9,7 +9,7 @@ merely close.  Two hazards and their engine-wide mitigations:
    which at lineitem-money magnitudes (~1e9 at sf0.1) can flip even a
    4-decimal rounding.  Mitigation: aggregate through ``DECIMAL`` — exact,
    associative, order-insensitive — then cast the (identical) decimal back
-   to double.  ``money_sum`` (2-decimal data), ``stat_sum`` (float32-ish
+   to double.  ``money_sum`` (2-decimal data), ``stat6`` (float32-ish
    data rounded to 6 decimals per row first, where double→decimal rounding
    is unambiguous in both engines).
 
@@ -91,16 +91,6 @@ def stat6(col: Column | str) -> Column:
     return F.round(_c(col).cast("double"), 6).cast("decimal(18,6)")
 
 
-def stat_sum(col: Column | str, alias: str) -> Column:
-    """Order-insensitive sum of 6-decimal-quantized values, as double."""
-    return F.sum(stat6(col)).cast("double").alias(alias)
-
-
-def stat_avg(col: Column | str, alias: str) -> Column:
-    c = _c(col)
-    return (F.sum(stat6(c)).cast("double") / F.count(c)).alias(alias)
-
-
 def big(col: Column | str, alias: str | None = None) -> Column:
     """Normalize derived integers (size(), row_number(), ...) to BIGINT."""
     out = _c(col).cast("bigint")
@@ -110,11 +100,6 @@ def big(col: Column | str, alias: str | None = None) -> Column:
 def r6(col: Column | str, alias: str | None = None) -> Column:
     """Round per-row float math to 6 decimals (transcendental insurance)."""
     out = F.round(_c(col).cast("double"), 6)
-    return out.alias(alias) if alias else out
-
-
-def r4(col: Column | str, alias: str | None = None) -> Column:
-    out = F.round(_c(col).cast("double"), 4)
     return out.alias(alias) if alias else out
 
 
@@ -141,14 +126,3 @@ def dd_rev_sum(price: str, disc: str, alias: str) -> str:
         f" * (100 - CAST(round({disc} * 100) AS BIGINT))) AS DOUBLE) / 10000.0 AS {alias}"
     )
 
-
-def dd_stat6(expr: str) -> str:
-    return f"CAST(round(CAST({expr} AS DOUBLE), 6) AS DECIMAL(18,6))"
-
-
-def dd_stat_sum(expr: str, alias: str) -> str:
-    return f"CAST(SUM({dd_stat6(expr)}) AS DOUBLE) AS {alias}"
-
-
-def dd_stat_avg(expr: str, alias: str) -> str:
-    return f"CAST(SUM({dd_stat6(expr)}) AS DOUBLE)/COUNT({expr}) AS {alias}"

@@ -37,12 +37,12 @@ No step is quadratic in the corpus.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
-from ..session import materialize
+from ..session import checkpoint_observed, fixpoint, materialize, release
 
 # --- shared constants (both dialects generated from these) -------------------
 
@@ -255,6 +255,25 @@ inter AS (
 #: cross-read; views are dropped once the returned plan is resolved).
 _LSH_STAGE_NONCE = __import__("itertools").count()
 
+#: ``lsh_pairs_staged`` verification tails over the staged ``inter`` CTE,
+#: keyed by ``score`` — a closed set, so an unknown score raises instead
+#: of silently taking one of them.  Each takes the ``via_star`` output
+#: column text ('' without the star tier).
+_LSH_SCORE_TAILS = {
+    "jaccard": lambda via_out: f"""
+SELECT i.doc1, i.doc2,
+       round(CAST(i.i AS DOUBLE) / (i.n1 + i.n2 - i.i), 6) AS jaccard{via_out}
+FROM inter i
+WHERE CAST(i.i AS DOUBLE) / (i.n1 + i.n2 - i.i) >= {MINHASH_JACCARD_MIN}""",
+    "containment": lambda via_out: f"""
+SELECT i.doc1, i.doc2,
+       round(CAST(i.i AS DOUBLE) / i.n1, 6) AS c_fwd,
+       round(CAST(i.i AS DOUBLE) / i.n2, 6) AS c_rev,
+       CAST(CASE WHEN i.n1 <= i.n2 THEN i.doc1 ELSE i.doc2 END AS BIGINT) AS contained_doc
+FROM inter i
+WHERE CAST(i.i AS DOUBLE) / LEAST(i.n1, i.n2) >= {CONTAINMENT_MIN}""",
+}
+
 
 def lsh_pairs_staged(
     spark: SparkSession,
@@ -292,11 +311,13 @@ def lsh_pairs_staged(
       cascade — is built behind a BROADCAST LEFT SEMI join on "docs in
       a ≥2-member bucket" (r16, guide §2.3/§3.2: drop non-matching rows
       from the heavy side before it shuffles).  Lossless by the
-      superset argument above.  The restriction is ADAPTIVE: one scalar
-      probe job over the already-checkpointed bands view counts the
-      shareable docs, and the semi-join is applied only when that count
-      fits ``LSH_VERIFY_IDS_BROADCAST_MAX`` — a broadcast filter is then
-      pure map-side row-dropping (no extra exchange), so any shrink is
+      superset argument above.  The restriction is ADAPTIVE: the
+      shareable-doc set is built once as a DISTINCT id list and
+      checkpointed, its row count riding that same job as an ``observe``
+      metric, and the semi-join broadcasts that checkpoint only when the
+      count fits ``LSH_VERIFY_IDS_BROADCAST_MAX`` — so the broadcast is
+      exactly the size the gate checked, and a broadcast filter is pure
+      map-side row-dropping (no extra exchange), so any shrink is
       a win.  Past the cap the builder keeps the unrestricted r15 shape:
       an un-broadcast semi-join re-shuffles the full shingle set, which
       MEASURED as a net loss on the dup-dense 30× stress (shuffle write
@@ -311,14 +332,20 @@ def lsh_pairs_staged(
       lossless.)
 
     ``score`` selects the verification tail over the same staged
-    cascade: ``"jaccard"`` (the default, ``_minhash_sql``'s tail) or
-    ``"containment"`` (``_containment_sql``'s asymmetric tail — r16,
-    the last one-statement Spark LSH consumer brought onto the staged
-    cascade; fragment texts unchanged, DuckDB oracle untouched).
+    cascade (``_LSH_SCORE_TAILS``): ``"jaccard"`` (the default,
+    ``_minhash_sql``'s tail) or ``"containment"`` (``_containment_sql``'s
+    asymmetric tail — r16, the last one-statement Spark LSH consumer
+    brought onto the staged cascade; fragment texts unchanged, DuckDB
+    oracle untouched).  Any other ``score`` raises ``ValueError``.
 
     Returns (doc1, doc2, jaccard[, via_star]) exactly as the one-statement
     builders do — or (doc1, doc2, c_fwd, c_rev, contained_doc) for the
     containment tail."""
+    if score not in _LSH_SCORE_TAILS:
+        raise ValueError(
+            f"lsh_pairs_staged: unknown score {score!r} "
+            f"(one of {', '.join(sorted(_LSH_SCORE_TAILS))})"
+        )
     cap = LSH_BUCKET_CAP if cap is None else int(cap)
     sigs_list = band_sigs if band_sigs is not None else _BAND_SIGS
     p = f"__lsh{next(_LSH_STAGE_NONCE)}_"
@@ -336,7 +363,7 @@ def lsh_pairs_staged(
     )
     created.append(f"{p}docs")
     shingles_raw = _SPARK_SHINGLES.replace("__docs", f"{p}docs")
-    mv(
+    sh = mv(
         spark.sql(f"SELECT DISTINCT doc_id, h FROM ({shingles_raw})"),
         f"{p}sh",
     )
@@ -351,36 +378,29 @@ def lsh_pairs_staged(
         ),
         f"{p}bands",
     )
-    # Adaptive verify restriction (see docstring): one scalar probe over
-    # the checkpointed bands decides whether the shareable-doc id list is
-    # small enough to broadcast; only then is the semi-join worth it.
-    n_shared = spark.sql(
-        f"""
-SELECT COUNT(DISTINCT b.doc_id) AS c
+    # Adaptive verify restriction (see docstring): the shareable-doc id
+    # set is checkpointed once, counted by the same job; only a set small
+    # enough to broadcast is worth the semi-join.
+    shared, got = checkpoint_observed(
+        spark.sql(
+            f"""
+SELECT DISTINCT b.doc_id
 FROM {p}bands b
 JOIN (SELECT band, sig FROM {p}bands
       GROUP BY band, sig HAVING COUNT(*) >= 2) g
   ON g.band = b.band AND g.sig = b.sig
 """
-    ).collect()[0][0]
-    if n_shared <= LSH_VERIFY_IDS_BROADCAST_MAX:
-        docsets_sql = f"""
-SELECT /*+ BROADCAST(c) */ s.doc_id, array_sort(array_agg(s.h)) AS hs
-FROM {p}sh s
-LEFT SEMI JOIN (
-  SELECT b.doc_id
-  FROM {p}bands b
-  JOIN (SELECT band, sig FROM {p}bands
-        GROUP BY band, sig HAVING COUNT(*) >= 2) g
-    ON g.band = b.band AND g.sig = b.sig
-) c ON s.doc_id = c.doc_id
-GROUP BY s.doc_id
-"""
-    else:
-        docsets_sql = (
-            f"SELECT doc_id, array_sort(array_agg(h)) AS hs FROM {p}sh GROUP BY doc_id"
-        )
-    mv(spark.sql(docsets_sql), f"{p}docsets")
+        ),
+        F.count(F.lit(1)).alias("n"),
+    )
+    docsets = sh
+    if got["n"] <= LSH_VERIFY_IDS_BROADCAST_MAX:
+        docsets = sh.join(F.broadcast(shared), "doc_id", "left_semi")
+    mv(
+        docsets.groupBy("doc_id").agg(F.array_sort(F.collect_list("h")).alias("hs")),
+        f"{p}docsets",
+    )
+    release(shared, sh)
     star_ctes = (
         f""",
 bover AS (SELECT band, sig, MIN(doc_id) AS ex FROM {p}bands GROUP BY band, sig
@@ -402,20 +422,7 @@ cand_all AS (
     inter_src = "cand_all" if star else "cand"
     via_sel = ", c.via_star" if star else ""
     via_out = ",\n       CAST(i.via_star AS BIGINT) AS via_star" if star else ""
-    if score == "containment":
-        score_sql = f"""
-SELECT i.doc1, i.doc2,
-       round(CAST(i.i AS DOUBLE) / i.n1, 6) AS c_fwd,
-       round(CAST(i.i AS DOUBLE) / i.n2, 6) AS c_rev,
-       CAST(CASE WHEN i.n1 <= i.n2 THEN i.doc1 ELSE i.doc2 END AS BIGINT) AS contained_doc
-FROM inter i
-WHERE CAST(i.i AS DOUBLE) / LEAST(i.n1, i.n2) >= {CONTAINMENT_MIN}"""
-    else:
-        score_sql = f"""
-SELECT i.doc1, i.doc2,
-       round(CAST(i.i AS DOUBLE) / (i.n1 + i.n2 - i.i), 6) AS jaccard{via_out}
-FROM inter i
-WHERE CAST(i.i AS DOUBLE) / (i.n1 + i.n2 - i.i) >= {MINHASH_JACCARD_MIN}"""
+    score_sql = _LSH_SCORE_TAILS[score](via_out)
     tail = spark.sql(
         f"""
 WITH bcap AS (SELECT band, sig FROM {p}bands GROUP BY band, sig
@@ -964,19 +971,7 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         "component_id", F.col("doc_id")
     )
 
-    # Σ component_id (exact decimal) is the fixpoint probe.  Min-label
-    # propagation is MONOTONE: every node's label is non-increasing, so
-    # two consecutive rounds have equal sums iff no label changed — an
-    # EXACT test (r15 opt round, guide §2.4).  r16: the per-round sum now
-    # rides the round's OWN checkpoint job as an ``observe`` metric
-    # (CollectMetrics computes it while the blocks are written), so the
-    # separate probe job — one full scan + agg per round — is gone
-    # (guide §5, driver round-trips).
-    _probe = F.sum(F.col("component_id").cast("decimal(28,0)")).alias("s")
-    prev_sum = labels.agg(_probe).collect()[0][0]
-    max_rounds = CC_MAX_ROUNDS  # ≥ graph diameter; breaks early at fixpoint
-    converged = False
-    for r in range(max_rounds):
+    def propagate(labels: DataFrame) -> DataFrame:
         # min over (own label ∪ neighbor labels) in ONE join + ONE
         # aggregation: the union row replaces the old second (left) join +
         # least/coalesce recombination — one exchange fewer per round
@@ -984,25 +979,24 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         neighbor_lbl = edges.join(labels, edges.doc2 == labels.doc_id).select(
             F.col("doc1").alias("doc_id"), "component_id"
         )
-        obs = Observation(f"cc_probe_{r}")
-        updated = materialize(
+        return (
             neighbor_lbl.unionAll(labels)
             .groupBy("doc_id")
             .agg(F.min("component_id").alias("component_id"))
-            .observe(obs, _probe)
         )
-        cur_sum = obs.get["s"]
-        labels = updated
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        raise RuntimeError(
-            f"dedup_connected_components: min-label propagation did not reach a "
-            f"fixpoint within {max_rounds} rounds (graph diameter exceeds cap); "
-            f"raising instead of returning unconverged component ids"
-        )
+
+    # Σ component_id (exact decimal) is the fixpoint probe.  Min-label
+    # propagation is MONOTONE: every node's label is non-increasing, so
+    # two consecutive rounds have equal sums iff no label changed — an
+    # EXACT test (r15 opt round, guide §2.4).
+    labels, _, _ = fixpoint(
+        labels,
+        propagate,
+        [F.sum(F.col("component_id").cast("decimal(28,0)")).alias("s")],
+        max_rounds=CC_MAX_ROUNDS,  # ≥ graph diameter; exits early at fixpoint
+        must_converge=True,
+    )
+    release(edges)
     return labels
 
 
@@ -1036,15 +1030,6 @@ def cc_star_labels(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
     )
     e = materialize(e)
 
-    # Edge-set checksum (count + Σ xxhash64, decimal sum: exact and
-    # overflow-free where a long sum would wrap).  r16: computed as an
-    # ``observe`` metric DURING each round's checkpoint job instead of a
-    # separate scan+agg job per round (guide §5).
-    _probe = [
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.xxhash64("u", "v").cast("decimal(28,0)")).alias("h"),
-    ]
-
     def _large_star(d: DataFrame) -> DataFrame:
         sym = d.union(d.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
@@ -1071,22 +1056,21 @@ def cc_star_labels(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
         )
         return moved
 
-    prev = None
-    converged = False
-    for r in range(max_rounds):
-        obs = Observation(f"ccstar_probe_{r}")
-        e = materialize(_small_star(_large_star(e)).observe(obs, *_probe))
-        got = obs.get
-        cur = (got["n"], got["h"])
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if not converged:
-        raise RuntimeError(
-            f"cc_star_labels: star operations did not stabilize within "
-            f"{max_rounds} rounds; raising instead of returning a non-star forest"
-        )
+    def star_round(d: DataFrame) -> DataFrame:
+        return _small_star(_large_star(d))
+
+    # Edge-set checksum probe (count + Σ xxhash64, decimal sum: exact and
+    # overflow-free where a long sum would wrap).
+    e, _, _ = fixpoint(
+        e,
+        star_round,
+        [
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.xxhash64("u", "v").cast("decimal(28,0)")).alias("h"),
+        ],
+        max_rounds=max_rounds,
+        must_converge=True,
+    )
     # e is now a star forest rooted at each component's min id: every
     # non-root appears exactly once as u with v = root; roots only as v.
     roots = e.select("v").distinct().join(
@@ -1320,41 +1304,38 @@ def pagerank_edges(edges: DataFrame, iters: int = PR_ITERS) -> DataFrame:
     ``pagerank_dedup_graph`` for the exactness and scale arguments).
     Assumes every node has out-degree ≥ 1 (true for symmetric graphs).
     """
-    nodes = edges.select(F.col("src").alias("id")).distinct()
-    # Degree and the per-node teleport/base constants are loop-invariant;
-    # without the materialize each round's job re-ran the degree aggregation,
-    # the node count, and the params broadcast build from scratch (the
-    # docstring's claimed reuse — made real in the r15 opt round, guide §2.4:
-    # one exchange + one broadcast-subquery job fewer per round).
-    deg = materialize(edges.groupBy("src").agg(F.count(F.lit(1)).alias("d")))
-    params = nodes.agg(F.count(F.lit(1)).alias("n"))
+    # The out-degree d and the per-node teleport term t are loop-invariant:
+    # they ride in the rank state (id, r, t, d), so a round joins the edges
+    # to ONE table — no separate degree join, and no invariant checkpoint
+    # outlives the loop.
+    deg = edges.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("d"))
+    params = deg.agg(F.count(F.lit(1)).alias("n"))
     base = F.expr(f"{PR_SCALE} div n")
     teleport = F.expr(f"({_PR_D_DEN - _PR_D_NUM} * ({PR_SCALE} div n)) div {_PR_D_DEN}")
-    nt = materialize(
-        nodes.crossJoin(F.broadcast(params)).select(
-            "id", base.alias("r0"), teleport.alias("t")
+    ranks = materialize(
+        deg.crossJoin(F.broadcast(params)).select(
+            "id", base.alias("r"), teleport.alias("t"), "d"
         )
     )
-    ranks = nt.select("id", F.col("r0").alias("r"))
-    for _ in range(iters):
+
+    def iterate(st: DataFrame) -> DataFrame:
         contrib = (
-            edges.join(ranks, edges.src == ranks.id)
-            .join(deg, "src")
+            edges.join(st, edges.src == st.id)
             .select(F.col("dst").alias("id"), F.expr("r div d").alias("c"))
             .groupBy("id")
             .agg(F.sum("c").alias("s"))
         )
-        ranks = materialize(
-            nt.join(contrib, "id", "left")
-            .select(
-                "id",
-                (
-                    F.col("t")
-                    + F.expr(f"({_PR_D_NUM} * coalesce(s, 0)) div {_PR_D_DEN}")
-                ).alias("r"),
-            )
+        return st.join(contrib, "id", "left").select(
+            "id",
+            (
+                F.col("t") + F.expr(f"({_PR_D_NUM} * coalesce(s, 0)) div {_PR_D_DEN}")
+            ).alias("r"),
+            "t",
+            "d",
         )
-    return ranks
+
+    ranks, _, _ = fixpoint(ranks, iterate, max_rounds=iters)
+    return ranks.select("id", "r")
 
 
 # --- communities on the near-dup graph (label propagation) -------------------
@@ -1667,23 +1648,19 @@ def dedup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             pairs.select(F.col("doc2").alias("u"), F.col("doc1").alias("v"))
         )
     )
-    prev = -1
-    for _ in range(KCORE_ROUNDS):
+
+    def peel(e: DataFrame) -> DataFrame:
         keep = (
             e.groupBy("u")
             .agg(F.count(F.lit(1)).alias("d"))
             .where(F.col("d") >= KCORE_K)
             .select("u")
         )
-        e = materialize(
-            e.join(keep, "u", "left_semi").join(
-                keep.select(F.col("u").alias("v")), "v", "left_semi"
-            )
+        return e.join(keep, "u", "left_semi").join(
+            keep.select(F.col("u").alias("v")), "v", "left_semi"
         )
-        n = e.count()
-        if n == prev:
-            break
-        prev = n
+
+    e, _, _ = fixpoint(e, peel, [F.count(F.lit(1)).alias("n")], max_rounds=KCORE_ROUNDS)
     return (
         e.select(F.col("u").alias("doc_id"))
         .groupBy("doc_id")

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.compat import big
 from ..registry import query
-from ..session import materialize
+from ..session import checkpoint_observed, fixpoint, materialize, release
 from .similarity import _dot, _norm2
 
 # --- graph-walk ANN search (the HNSW/DiskANN query half) -----------------------
@@ -161,14 +161,15 @@ def _gs_search_edges(
     at index time."""
     from .singlecell import SC_NND_K_BUILD, sc_nnd_edges_ivfseed
 
-    g = sc_nnd_edges_ivfseed(spark, sf_dir).where(F.col("rk") <= SC_NND_K_BUILD)
+    built = sc_nnd_edges_ivfseed(spark, sf_dir)
+    g = built.where(F.col("rk") <= SC_NND_K_BUILD)
     sym = materialize(
         g.select(F.col("vec_id").alias("src"), F.col("nbr").alias("dst"))
         .union(g.select(F.col("nbr").alias("src"), F.col("vec_id").alias("dst")))
         .distinct()
     )
+    release(built)
     e = load_table(spark, sf_dir, "embeddings")
-    n = e.count()
     qv = materialize(
         e.where(F.col("vec_id") % qmod == 0).select(
             F.col("vec_id").alias("qid"),
@@ -182,14 +183,17 @@ def _gs_search_edges(
     # recomputations with one block read per reference — the same
     # materialize-the-scoring-projection discipline ``sc_nnd_edges``
     # documents (its ``a``/``b`` pair).  A/B at sf0.1: 17.4 s → 15.8 s
-    # steady-state, job count unchanged.
-    cv = materialize(
+    # steady-state, job count unchanged.  The corpus size n rides the
+    # same checkpoint job.
+    cv, got = checkpoint_observed(
         e.select(
             F.col("vec_id").alias("node"),
             F.col("embedding").alias("ce"),
             _norm2(F.col("embedding")).alias("cn"),
-        )
+        ),
+        F.count(F.lit(1)).alias("n"),
     )
+    n = got["n"]
     d2 = F.round(F.col("qn") + F.col("cn") - 2 * _dot(F.col("qe"), F.col("ce")), 6)
 
     def score(cand: DataFrame) -> DataFrame:
@@ -212,16 +216,18 @@ def _gs_search_edges(
             .distinct()
         )
     )
-    for _ in range(rounds):
+
+    def expand(frontier: DataFrame) -> DataFrame:
         hop = (
             frontier.select("qid", "node")
             .join(sym, F.col("node") == F.col("src"))
             .select("qid", F.col("dst").alias("node"))
             .where(F.col("node") != F.col("qid"))
         )
-        frontier = materialize(
-            score(frontier.select("qid", "node").union(hop).distinct())
-        )
+        return score(frontier.select("qid", "node").union(hop).distinct())
+
+    frontier, _, _ = fixpoint(frontier, expand, max_rounds=rounds)
+    release(sym, qv, cv)
     return frontier
 
 

@@ -36,7 +36,6 @@ normalize/log1p/recipe is ``|v|``; (c) HVG dispersion is the variance
 
 from __future__ import annotations
 
-import functools
 import itertools
 import math
 
@@ -46,7 +45,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.compat import big, stat6
 from ..registry import query
-from ..session import materialize, sever
+from ..session import checkpoint_observed, fixpoint, materialize, release, sever
 
 #: "expressed" threshold for continuous (non-count) matrix values.
 EXPR_THRESHOLD = 0.1
@@ -1363,9 +1362,27 @@ seed AS MATERIALIZED (
     return ",\n".join(parts)
 
 
+def nnd_vectors(vecs: DataFrame) -> DataFrame:
+    """(vec_id, embedding) → the NN-descent scoring frame (vec_id, ea, na):
+    the vector and its squared norm, so every scored pair is one dot."""
+    from .similarity import _norm2
+
+    return vecs.select(
+        "vec_id", F.col("embedding").alias("ea"), _norm2(F.col("embedding")).alias("na")
+    )
+
+
+def _nnd_ring(vecs: DataFrame, n: int, width: int) -> DataFrame:
+    """Deterministic ring seed: nbr = (vec_id + j) mod n, j = 1..width."""
+    return (
+        vecs.select("vec_id", F.explode(F.sequence(F.lit(1), F.lit(width))).alias("j"))
+        .select("vec_id", ((F.col("vec_id") + F.col("j")) % n).alias("nbr"))
+        .where(F.col("nbr") != F.col("vec_id"))
+    )
+
+
 def sc_nnd_edges(
-    spark: SparkSession,
-    sf_dir: str,
+    vecs: DataFrame,
     rounds: int = SC_NND_ROUNDS,
     k: int = SC_NND_K_BUILD,
     seed: DataFrame | None = None,
@@ -1382,6 +1399,13 @@ def sc_nnd_edges(
     stay in the candidate set) and seed-free deterministic, so the DuckDB
     oracle mirrors every round.
 
+    The one NN-descent kernel: ``vecs`` is a prepared (vec_id, ea, na)
+    frame (``nnd_vectors``) — the raw embeddings for ``sc_neighbors_nnd``,
+    the recipe output for the notebook, an ``AnnFrame``'s ``X`` — and
+    ``seed`` an optional (vec_id, nbr) seed graph (default: the ring
+    seed, deduplicated when ``k >= n`` makes the ring wrap onto repeated
+    targets).  Returns (vec_id, nbr, d2, rk) with rk ≤ ``k``.
+
     Scale shape: per round, candidates are ≤ (2k)² per vector — O(n·k²)
     scored pairs TOTAL, never n²; the expansion is two self-joins of an
     O(n·k) edge list keyed on the shared vertex (shuffle carries edge
@@ -1391,17 +1415,11 @@ def sc_nnd_edges(
     100 TB rounds ≈ log(n)/log(k) and each round is the same one
     exchange.  Rank determinism: rounded d² + nbr tie-break, as the
     exact graph."""
-    from .similarity import _dot, _norm2
+    from .similarity import _dot
 
-    e = load_table(spark, sf_dir, "embeddings")
-    n = e.count()
-    a = materialize(
-        e.select(
-            "vec_id",
-            F.col("embedding").alias("ea"),
-            _norm2(F.col("embedding")).alias("na"),
-        )
-    )
+    # n (the ring modulus) rides the scoring frame's checkpoint job.
+    a, got = checkpoint_observed(vecs, F.count(F.lit(1)).alias("n"))
+    n = got["n"]
     # b is a column-renamed view of the SAME materialized rows — one scan,
     # one block copy (r13 review: materializing both sides doubled it).
     b = a.select(
@@ -1421,13 +1439,11 @@ def sc_nnd_edges(
         return scored.withColumn("rk", big(rk)).where(F.col("rk") <= k)
 
     if seed is None:
-        seed = (
-            e.select("vec_id", F.explode(F.sequence(F.lit(1), F.lit(k))).alias("j"))
-            .select("vec_id", ((F.col("vec_id") + F.col("j")) % n).alias("nbr"))
-            .where(F.col("nbr") != F.col("vec_id"))
-        )
-    g = materialize(score(seed))
-    for _ in range(rounds):
+        seed = _nnd_ring(a, n, k)
+        if k >= n:
+            seed = seed.distinct()
+
+    def refine(g: DataFrame) -> DataFrame:
         # ONE checkpoint per round (r16 opt round, guide §5 driver
         # round-trips): u = (g ∪ gᵀ).distinct() is NOT materialized — its
         # three references compile to canonically identical
@@ -1435,9 +1451,7 @@ def sc_nnd_edges(
         # AQE stage reuse executes the distinct's shuffle once, and Catalyst
         # drops the redundant inner distinct on the direct-union branch
         # outright (Distinct(Union(Distinct(A), B)) → Distinct(Union(A, B))
-        # — see plans/r16/nnd_round_after.txt).  The old shape paid a
-        # second localCheckpoint (full block write of the edge list) per
-        # round for the same exchange.
+        # — see plans/r16/nnd_round_after.txt).
         u = (
             g.select("vec_id", "nbr")
             .union(
@@ -1451,7 +1465,10 @@ def sc_nnd_edges(
             .select(F.col("x.vec_id").alias("vec_id"), F.col("y.nbr").alias("nbr"))
             .where(F.col("vec_id") != F.col("nbr"))
         )
-        g = materialize(score(u.union(hop).distinct()))
+        return score(u.union(hop).distinct())
+
+    g, _, _ = fixpoint(materialize(score(seed)), refine, max_rounds=rounds)
+    release(a)
     return g
 
 
@@ -1482,6 +1499,7 @@ def sc_nnd_edges_ivfseed(
             f"seed split must satisfy 0 < split <= k (got split={split}, k={k})"
         )
     w_cell = W.partitionBy("cell").orderBy("vec_id")
+    e = load_table(spark, sf_dir, "embeddings")
     mem = materialize(
         sc_ivf_cells(spark, sf_dir).select(
             "vec_id",
@@ -1504,20 +1522,12 @@ def sc_nnd_edges_ivfseed(
         .where(F.col("nbr") != F.col("vec_id"))
         .select("vec_id", "nbr")
     )
+    seed = cell_ring
     if split < k:
-        e = load_table(spark, sf_dir, "embeddings")
-        n = e.count()
-        global_ring = (
-            e.select(
-                "vec_id", F.explode(F.sequence(F.lit(1), F.lit(k - split))).alias("j")
-            )
-            .select("vec_id", ((F.col("vec_id") + F.col("j")) % n).alias("nbr"))
-            .where(F.col("nbr") != F.col("vec_id"))
-        )
-        seed = cell_ring.union(global_ring).distinct()
-    else:
-        seed = cell_ring.distinct()
-    return sc_nnd_edges(spark, sf_dir, rounds=rounds, k=k, seed=seed)
+        seed = seed.union(_nnd_ring(e, e.count(), k - split))
+    g = sc_nnd_edges(nnd_vectors(e), rounds=rounds, k=k, seed=seed.distinct())
+    release(mem)
+    return g
 
 
 _SC_NND_ORACLE = f"""
@@ -1532,7 +1542,7 @@ def sc_neighbors_nnd(spark: SparkSession, sf_dir: str) -> DataFrame:
     the graph-based approximate kNN graph itself, hash-checked round for
     round against the unrolled oracle chain (see the builder's docstring
     for semantics and the 100 TB shape)."""
-    return sc_nnd_edges(spark, sf_dir)
+    return sc_nnd_edges(nnd_vectors(load_table(spark, sf_dir, "embeddings")))
 
 
 _SC_NND_RECALL_ORACLE = f"""
@@ -1564,7 +1574,7 @@ def sc_neighbors_nnd_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     in rounds (candidates always include current edges) — pinned in
     ``tests/test_ivf_neighbors.py``."""
     exact = sc_neighbor_edges(spark, sf_dir)
-    g = sc_nnd_edges(spark, sf_dir).select(
+    g = sc_nnd_edges(nnd_vectors(load_table(spark, sf_dir, "embeddings"))).select(
         "vec_id", "nbr", F.lit(1).alias("hit")
     )
     return (
@@ -1769,8 +1779,8 @@ def lpa_labels(
     label breaks the swap symmetry) include explicit ``(v, v)`` self-loop
     edges, which also guarantees every node appears each round.
 
-    Runs at most ``max_rounds`` rounds with a driver O(1) fixpoint check
-    (the CC pattern: ``materialize`` truncates lineage per round).  Early
+    Runs at most ``max_rounds`` rounds on ``session.fixpoint``, which
+    truncates lineage per round and exits early at the fixpoint.  Early
     exit is sound against a fixed-round unrolled oracle because the
     update is a pure function of the label table — once a round changes
     nothing, every further round is the identity.  Pass a ``stats`` dict
@@ -1785,33 +1795,23 @@ def lpa_labels(
     in-degree (2k+1 on a symmetrized kNN graph), so no skewed reducer at
     any corpus size; label state is O(nodes) and never collected.
     """
-    labels = (
-        edges.select(F.col("src").alias("id")).distinct().withColumn("lbl", F.col("id"))
+    labels = edges.select(F.col("src").alias("id")).distinct().select(
+        "id", F.col("id").alias("lbl"), F.lit(0).cast("long").alias("mv")
     )
 
-    # EXACT fixpoint probe, zero extra jobs (r16 opt round, guide §5 +
-    # r15 verdict #6): each node's PREVIOUS label rides the candidate
-    # aggregation as a marker row with c = -1 (real candidates have
-    # c ≥ 1, so the marker can never win the argmax and nodes without
-    # real in-edge candidates are filtered exactly as before), giving the
-    # winning AND previous label in one hash aggregate — no join.  The
-    # per-round probe is then Σ(new ≠ old) + the surviving row count,
-    # computed as ``observe`` metrics DURING the round's checkpoint job.
-    # This retires the r15 (count, Σ xxhash64) fingerprint and its
-    # 2⁻⁶⁴-per-round collision caveat: convergence is now moved = 0 with
-    # an unchanged row count — exact.  (updated ids ⊆ previous ids every
-    # round — a node without surviving candidates drops out — so
-    # moved = 0 ∧ n = prev_n ⟺ the tables are equal.)
-    prev_n = labels.count()  # one job, replacing the old initial checksum job
-    rounds_used, converged = 0, False
-    for r in range(max_rounds):
+    def propagate(labels: DataFrame) -> DataFrame:
         counts = (
             edges.join(labels, edges.dst == labels.id)
             .groupBy(edges.src, labels.lbl)
             .agg(F.count(F.lit(1)).cast("long").alias("c"))
         )
+        # Each node's PREVIOUS label and move count ride the candidate
+        # aggregation as a marker row with c = -1 (real candidates have
+        # c ≥ 1, so the marker can never win the argmax and nodes without
+        # real in-edge candidates are filtered exactly as before), giving
+        # the winning AND previous label in one hash aggregate — no join.
         marker = labels.select(
-            F.col("id").alias("src"), "lbl", F.lit(-1).cast("long").alias("c")
+            F.col("id").alias("src"), "lbl", F.lit(-1).cast("long").alias("c"), "mv"
         )
         # argmax via max(struct(c, -lbl, lbl)): lexicographic struct max ==
         # the old row_number ORDER BY c DESC, lbl ASC pick, but partial-
@@ -1819,7 +1819,7 @@ def lpa_labels(
         # round, guide §2.3).  Labels are nonnegative node ids, so -lbl
         # cannot wrap (r15 advice).
         win = (
-            counts.select("src", "lbl", "c")
+            counts.select("src", "lbl", "c", F.lit(None).cast("long").alias("mv"))
             .unionByName(marker)
             .groupBy("src")
             .agg(
@@ -1830,34 +1830,30 @@ def lpa_labels(
                     )
                 ).alias("w"),
                 F.max(F.when(F.col("c") == -1, F.col("lbl"))).alias("old"),
+                F.max("mv").alias("mv"),
             )
         )
-        obs = Observation(f"lpa_probe_{r}")
-        updated = materialize(
-            win.where(F.col("w.c") > 0)
-            .select(
-                F.col("src").alias("id"),
-                F.col("w.wlbl").alias("lbl"),
-                (F.col("w.wlbl") != F.col("old")).alias("_mv"),
-            )
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("_mv").cast("long")).alias("moved"),
-            )
-            .select("id", "lbl")
+        return win.where(F.col("w.c") > 0).select(
+            F.col("src").alias("id"),
+            F.col("w.wlbl").alias("lbl"),
+            (F.col("mv") + (F.col("w.wlbl") != F.col("old")).cast("long")).alias("mv"),
         )
-        rounds_used += 1
-        got = obs.get
-        labels = updated
-        if (got["moved"] or 0) == 0 and got["n"] == prev_n:
-            converged = True
-            break
-        prev_n = got["n"]
+
+    # EXACT fixpoint probe: (row count, Σ cumulative moves).  Updated ids
+    # ⊆ previous ids every round (a node without surviving candidates
+    # drops out), so an unchanged count means no node dropped, and an
+    # unchanged move total means no surviving node changed label — the
+    # probe repeats iff the table is unchanged.
+    labels, rounds, converged = fixpoint(
+        labels,
+        propagate,
+        [F.count(F.lit(1)).alias("n"), F.sum("mv").alias("moves")],
+        max_rounds=max_rounds,
+    )
     if stats is not None:
-        stats["rounds"] = rounds_used
+        stats["rounds"] = rounds
         stats["converged"] = converged
-    return labels
+    return labels.select("id", "lbl")
 
 
 @query(
@@ -2046,6 +2042,8 @@ def louvain_phase1_labels(
     max_rounds: int = SC_MODULARITY_ROUNDS,
     stats: dict | None = None,
     gamma: tuple[int, int] = (1, 1),
+    weight: str | None = None,
+    selfmass: DataFrame | None = None,
 ) -> DataFrame:
     """Deterministic PHASED-SYNCHRONOUS Louvain phase-1 (modularity-
     greedy label assignment) over a symmetric, self-loop-free
@@ -2100,8 +2098,8 @@ def louvain_phase1_labels(
     Scale shape, per round: one dst-keyed join + (src, lbl) partial+
     final count for k_{u,c}; one O(communities) degree-sum aggregate;
     one bounded window per node (candidates ≤ degree+1) — no skewed
-    reducer, state O(nodes), never collected.  The M scalar rides a
-    1-row broadcast.
+    reducer, state O(nodes) plus each node's label history (one BIGINT
+    per round), never collected.  The M scalar is an inlined literal.
 
     ``gamma`` (r11) is the RESOLUTION parameter γ = γ_num/γ_den of the
     Reichardt–Bornholdt generalized modularity (the knob Scanpy's
@@ -2114,38 +2112,78 @@ def louvain_phase1_labels(
         Qnum_γ = γ_den·M·e_in − γ_num·Σ_c tot(c)².
     γ = 1/1 reproduces the classic scores bit-for-bit (the literal 1
     factors constant-fold away in Catalyst).
+
+    WEIGHTED form — Louvain's level-2+ passes over a coarsened
+    supergraph: ``weight`` names an integer multi-edge weight column of
+    ``edges`` (default: every edge weighs 1), which carries NO
+    self-edges; ``selfmass`` carries (id, sm), each supernode's internal
+    directed edge mass (2× its internal undirected edges — the level-1
+    community's collapsed interior).  Degrees are k(u) = Σ_out w + sm(u),
+    so the total mass M = Σ k is EXACTLY the original graph's directed
+    edge count — the invariant that makes level-2 modularity directly
+    comparable to level-1's.  k_{u,c} becomes the edge weight from u
+    into c (self-mass excluded — it moves with u and cancels across
+    candidates), and e_in counts same-label edge weight plus ALL
+    self-mass.  Over the COARSENED graph every level after the first is
+    O(communities) rows — nearly free at any corpus size (the published
+    Louvain observation that level 1 dominates runtime).
     """
     gnum, gden = int(gamma[0]), int(gamma[1])
     if gnum <= 0 or gden <= 0:
         raise ValueError(f"gamma must be a positive rational, got {gamma}")
-    deg = materialize(
-        edges.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("k"))
+    edges = edges.select(
+        "src", "dst", (F.lit(1) if weight is None else F.col(weight)).cast("long").alias("w")
     )
-    # M = Σk is a driver-known scalar: inline it as a LITERAL instead of the
-    # previous per-phase crossJoin(broadcast(mm)) — the broadcast rebuilt the
-    # degree aggregation from the raw edges on EVERY phase (r15 opt round:
-    # one fewer aggregation pass + one fewer broadcast exchange per phase,
-    # guide §2.4).
-    m_val = int(deg.agg(F.sum("k")).collect()[0][0])
-
-    # Label state carries (id, lbl, k, moved): k riding in the state kills
-    # the separate deg join per phase (one state join replaces the old
-    # deg-by-src + labels-by-src pair), and the exact ``moved`` flag makes
-    # the per-round fixpoint probe a SCAN of the checkpointed state instead
-    # of an O(n) shuffle join (guide §2.4 — remove shuffles outright).
-    state = deg.select(
-        "id", F.col("id").alias("lbl"), "k", F.lit(False).alias("moved")
+    out_w = edges.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("k"))
+    if selfmass is None:
+        deg = out_w.select("id", "k", F.lit(0).cast("long").alias("sm"))
+    else:
+        nodes = (
+            edges.select(F.col("src").alias("id"))
+            .union(edges.select(F.col("dst").alias("id")))
+            .union(selfmass.select("id"))
+            .distinct()
+        )
+        deg = (
+            nodes.join(out_w, "id", "left")
+            .join(selfmass.select("id", F.col("sm").cast("long").alias("sm")), "id", "left")
+            .select(
+                "id",
+                (F.coalesce("k", F.lit(0)) + F.coalesce("sm", F.lit(0))).cast("long").alias("k"),
+                F.coalesce("sm", F.lit(0)).cast("long").alias("sm"),
+            )
+        )
+    # Label state (id, lbl, k, mv, hist): k riding in the state kills the
+    # separate deg join per phase; ``mv`` counts each node's moves so far,
+    # so Σmv — the fixpoint probe — repeats exactly when a round moved
+    # nobody; ``hist`` holds the node's label at every earlier round, so
+    # the best-Q pick needs no earlier round's checkpoint.  M = Σk and the
+    # self-mass total ride the initial state's checkpoint job: M is then
+    # inlined as a LITERAL (r15 opt round: no per-phase broadcast).
+    state, got = checkpoint_observed(
+        deg.select(
+            "id",
+            F.col("id").alias("lbl"),
+            "k",
+            F.lit(0).cast("long").alias("mv"),
+            F.array().cast("array<bigint>").alias("hist"),
+            "sm",
+        ),
+        F.sum("k").alias("m"),
+        F.sum("sm").alias("smt"),
     )
+    m_val, sm_total = int(got["m"]), int(got["smt"] or 0)
 
-    def _phase(st: DataFrame, phase: int, obs: Observation | None = None) -> DataFrame:
+    def _phase(st: DataFrame, phase: int) -> DataFrame:
         # One aggregation builds the candidate set: neighbor-label rows
-        # count 1, the node's own "stay" row counts 0 — sum == the old
-        # two-level count-then-max (r15 opt round: one exchange instead of
-        # two below the scoring joins, guide §2.3 partial aggregation).
+        # carry the edge weight, the node's own "stay" row carries 0 — sum
+        # == the old two-level count-then-max (r15 opt round: one exchange
+        # instead of two below the scoring joins, guide §2.3 partial
+        # aggregation).
         nbr = (
             edges.join(st.select(F.col("id").alias("dst"), "lbl"), "dst")
             .where(F.col("src") % 2 == phase)
-            .select("src", F.col("lbl").alias("clbl"), F.lit(1).cast("long").alias("cnt"))
+            .select("src", F.col("lbl").alias("clbl"), F.col("w").alias("cnt"))
         )
         own = st.where(F.col("id") % 2 == phase).select(
             F.col("id").alias("src"),
@@ -2162,8 +2200,7 @@ def louvain_phase1_labels(
             F.col("clbl").alias("plbl"), F.col("csz").alias("ocsz")
         )
         me = st.select(
-            F.col("id").alias("src"), F.col("lbl").alias("plbl"), "k",
-            F.col("moved").alias("mvd"),
+            F.col("id").alias("src"), F.col("lbl").alias("plbl"), "k", "mv", "hist"
         )
         scored = (
             cand.join(me, "src")
@@ -2187,7 +2224,8 @@ def louvain_phase1_labels(
                 "clbl",
                 "k",
                 "plbl",
-                "mvd",
+                "mv",
+                "hist",
                 (
                     F.lit(gden * m_val).cast("long") * F.col("kuc")
                     - F.lit(gnum).cast("long")
@@ -2204,9 +2242,9 @@ def louvain_phase1_labels(
         # but as a partial-aggregatable hash aggregate instead of a
         # sort+window (r15 opt round: map-side combine collapses each
         # node's ≤degree+1 candidates before the exchange, and the
-        # per-partition sort disappears; guide §2.3).  k/plbl/mvd are
+        # per-partition sort disappears; guide §2.3).  k/plbl/mv/hist are
         # functionally determined by src, so the grouping is per-node.
-        win = scored.groupBy("src", "k", "plbl", "mvd").agg(
+        win = scored.groupBy("src", "k", "plbl", "mv", "hist").agg(
             F.max(
                 F.struct(
                     F.col("score"),
@@ -2219,47 +2257,37 @@ def louvain_phase1_labels(
             F.col("src").alias("id"),
             F.col("w.wlbl").alias("lbl"),
             "k",
-            (F.col("mvd") | (F.col("w.wlbl") != F.col("plbl"))).alias("moved"),
+            (F.col("mv") + (F.col("w.wlbl") != F.col("plbl")).cast("long")).alias("mv"),
+            "hist",
         )
-        kept = st.where(F.col("id") % 2 != phase).select("id", "lbl", "k", "moved")
-        out = moved.unionAll(kept)
-        if obs is not None:
-            # Σmoved rides the phase-1 checkpoint job as an ``observe``
-            # metric — the separate scan job per round is gone (r16 opt
-            # round, guide §5).
-            out = out.observe(obs, F.sum(F.col("moved").cast("long")).alias("mv"))
-        return materialize(out)
+        kept = st.where(F.col("id") % 2 != phase).select("id", "lbl", "k", "mv", "hist")
+        return moved.unionAll(kept)
 
-    hist = [state]
-    rounds_used, converged = 0, False
-    for _ in range(max_rounds):
-        # moved flags reset at round start (a lazy projection fused into
-        # the phase-0 plan), so the post-round probe sees THIS round only.
-        fresh = hist[-1].select("id", "lbl", "k", F.lit(False).alias("moved"))
-        obs = Observation(f"louvain_probe_{rounds_used}")
-        updated = _phase(_phase(fresh, 0), 1, obs)
-        rounds_used += 1
-        changed = int(obs.get["mv"] or 0)
-        if changed == 0:
-            # fixpoint: this and every further round equals the last
-            # recorded state, with identical Q — under the earliest-
-            # round tie rule the argmax over the full unrolled budget
-            # equals the argmax over the recorded prefix.
-            converged = True
-            break
-        hist.append(updated)
-    # Per-round Q numerators in ONE job over a round-tagged union of the
-    # recorded states: the edge table is joined by (src)/(dst, r) ONCE for
-    # all rounds instead of re-joined per round (the old shape paid 2 jobs
-    # and 2 fresh SMJ plans per round for a selection key the loop never
-    # branched on; r15 opt round, guide §2.4/§5).
-    lab_all = functools.reduce(
-        DataFrame.unionByName,
-        [
-            st.select(F.lit(i).alias("r"), "id", "lbl", "k")
-            for i, st in enumerate(hist)
-        ],
+    half: list[DataFrame] = []
+
+    def louvain_round(st: DataFrame) -> DataFrame:
+        # The previous round's phase-0 checkpoint is dead once its round
+        # is written; this round's goes when the next round starts.
+        release(*half)
+        st = st.select(
+            "id", "lbl", "k", "mv", F.concat("hist", F.array("lbl")).alias("hist")
+        )
+        half[:] = [materialize(_phase(st, 0))]
+        return _phase(half[0], 1)
+
+    state, rounds, converged = fixpoint(
+        state, louvain_round, [F.sum("mv").alias("moves")], max_rounds=max_rounds
     )
+    release(*half)
+    # Rounds 0..r in label order.  At a fixpoint the last round repeats
+    # the one before it, with identical Q — under the earliest-round tie
+    # rule the argmax over the full unrolled budget equals the argmax over
+    # the recorded prefix, so the repeat is left out.
+    seq = F.col("hist") if converged else F.concat("hist", F.array("lbl"))
+    # Per-round Q numerators in ONE job over the round-tagged history: the
+    # edge table is joined by (src)/(dst, r) ONCE for all rounds (r15 opt
+    # round, guide §2.4/§5).
+    lab_all = state.select("id", "k", F.posexplode(seq).alias("r", "lbl"))
     la = lab_all.select("r", F.col("id").alias("src"), F.col("lbl").alias("la"))
     lb = lab_all.select("r", F.col("id").alias("dst"), F.col("lbl").alias("lb"))
     e_in_df = (
@@ -2267,7 +2295,7 @@ def louvain_phase1_labels(
         .join(lb, ["dst", "r"])
         .where(F.col("la") == F.col("lb"))
         .groupBy("r")
-        .agg(F.count(F.lit(1)).alias("e_in"))
+        .agg(F.sum("w").alias("e_in"))
     )
     sumsq_df = (
         lab_all.groupBy("r", "lbl")
@@ -2275,20 +2303,19 @@ def louvain_phase1_labels(
         .groupBy("r")
         .agg(F.sum(F.col("tot") * F.col("tot")).alias("sumsq"))
     )
-    qnums = [0] * len(hist)
+    qnums = [0] * (rounds + (0 if converged else 1))
     # left join: a round with zero same-label edges (round 0 on a
     # self-loop-free graph) has no e_in row — it contributes e_in = 0.
     for row in sumsq_df.join(e_in_df, "r", "left").collect():
         e_in = int(row["e_in"]) if row["e_in"] is not None else 0
-        qnums[row["r"]] = gden * m_val * e_in - gnum * int(row["sumsq"])
+        qnums[row["r"]] = gden * m_val * (e_in + sm_total) - gnum * int(row["sumsq"])
     best_r = max(range(len(qnums)), key=lambda i: (qnums[i], -i))
-    best_labels = hist[best_r]
     if stats is not None:
-        stats["rounds"] = rounds_used
+        stats["rounds"] = rounds
         stats["converged"] = converged
         stats["best_round"] = best_r
         stats["best_qnum"] = max(qnums)
-    return best_labels.select("id", "lbl")
+    return state.select("id", F.element_at(seq, best_r + 1).alias("lbl"))
 
 
 def _modularity_qnum_sql(li: str, r: int, gnum: int = 1, gden: int = 1) -> str:
@@ -2547,195 +2574,6 @@ def sc_communities_leiden(
 # --- Louvain level 2: coarsened weighted phase-1 -------------------------------
 
 
-def louvain_phase1_weighted(
-    edges: DataFrame,
-    selfmass: DataFrame,
-    max_rounds: int = SC_MODULARITY_ROUNDS,
-    stats: dict | None = None,
-) -> DataFrame:
-    """The WEIGHTED phased modularity step ``louvain_phase1_labels`` is
-    the w=1 case of — the engine for Louvain's level-2+ passes over a
-    coarsened supergraph: ``edges`` carries (src, dst, w) with integer
-    multi-edge weights and NO self-edges; ``selfmass`` carries (id, sm),
-    each supernode's internal directed edge mass (2× its internal
-    undirected edges — the level-1 community's collapsed interior).
-    Degrees are k(u) = Σ_out w + sm(u), so the total mass M = Σ k is
-    EXACTLY the original graph's directed edge count — the invariant
-    that makes level-2 modularity directly comparable to level-1's.
-
-    Same contract as the unweighted function: integer scores
-    M·W_{u,c} − k_u·(Σtot(c) − [own]·k_u) with W_{u,c} the edge weight
-    from u into c (self-mass excluded — it moves with u and cancels
-    across candidates), id-parity phases, minimum-labeling damping,
-    best-Q-state selection (Q numerator M·e_in − Σtot², where e_in
-    counts same-label edge weight plus ALL self-mass), driver fixpoint
-    early-exit, ``stats`` sink.  Scale shape: identical per-round cost
-    class, but over the COARSENED graph — O(communities) rows, so
-    every level after the first is nearly free at any corpus size (the
-    published Louvain observation that level 1 dominates runtime).
-    """
-    nodes = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .union(selfmass.select("id"))
-        .distinct()
-    )
-    deg = materialize(
-        nodes.join(
-            edges.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("wd")),
-            "id",
-            "left",
-        )
-        .join(selfmass.withColumnRenamed("sm", "smv"), "id", "left")
-        .select(
-            "id",
-            (
-                F.coalesce(F.col("wd"), F.lit(0)) + F.coalesce(F.col("smv"), F.lit(0))
-            ).cast("long").alias("k"),
-        )
-    )
-    m_val = int(deg.agg(F.sum("k")).collect()[0][0])
-    sm_total = int(
-        selfmass.agg(F.coalesce(F.sum("sm"), F.lit(0))).collect()[0][0]
-    )
-    # Same r15 restructure as the unweighted ``louvain_phase1_labels`` (see
-    # there for the argument): k + exact ``moved`` flag ride in the state,
-    # candidate counting is ONE aggregation (neighbor rows carry w, the
-    # "stay" row carries 0 — sum == the old count-then-max), the argmax is
-    # a partial-aggregatable max(struct) instead of a sort+window, M is an
-    # inlined literal instead of a per-phase broadcast that re-aggregated
-    # the degree table, and the per-round Q probes are deferred to one
-    # round-tagged batch job after the loop.
-    state = deg.select(
-        "id", F.col("id").alias("lbl"), "k", F.lit(False).alias("moved")
-    )
-
-    def _phase(st: DataFrame, phase: int, obs: Observation | None = None) -> DataFrame:
-        nbr = (
-            edges.join(st.select(F.col("id").alias("dst"), "lbl"), "dst")
-            .where(F.col("src") % 2 == phase)
-            .select(
-                "src", F.col("lbl").alias("clbl"), F.col("w").cast("long").alias("cnt")
-            )
-        )
-        own = st.where(F.col("id") % 2 == phase).select(
-            F.col("id").alias("src"),
-            F.col("lbl").alias("clbl"),
-            F.lit(0).cast("long").alias("cnt"),
-        )
-        cand = nbr.unionAll(own).groupBy("src", "clbl").agg(
-            F.sum("cnt").cast("long").alias("kuc")
-        )
-        tot = (
-            st.groupBy("lbl")
-            .agg(F.sum("k").alias("tot"), F.count(F.lit(1)).alias("csz"))
-            .select(F.col("lbl").alias("clbl"), "tot", "csz")
-        )
-        own_sz = tot.select(F.col("clbl").alias("plbl"), F.col("csz").alias("ocsz"))
-        me = st.select(
-            F.col("id").alias("src"), F.col("lbl").alias("plbl"), "k",
-            F.col("moved").alias("mvd"),
-        )
-        scored = (
-            cand.join(me, "src")
-            .join(tot, "clbl")
-            .join(own_sz, "plbl")
-            .where(
-                (F.col("clbl") == F.col("plbl"))
-                | ~(
-                    (F.col("ocsz") == 1)
-                    & (F.col("csz") == 1)
-                    & (F.col("clbl") > F.col("plbl"))
-                )
-            )
-            .select(
-                "src",
-                "clbl",
-                "k",
-                "plbl",
-                "mvd",
-                (
-                    F.lit(m_val).cast("long") * F.col("kuc")
-                    - F.col("k")
-                    * (
-                        F.col("tot")
-                        - F.when(
-                            F.col("plbl") == F.col("clbl"), F.col("k")
-                        ).otherwise(0)
-                    )
-                ).alias("score"),
-            )
-        )
-        win = scored.groupBy("src", "k", "plbl", "mvd").agg(
-            F.max(
-                F.struct(
-                    F.col("score"),
-                    (-F.col("clbl")).alias("negc"),
-                    F.col("clbl").alias("wlbl"),
-                )
-            ).alias("w")
-        )
-        moved = win.select(
-            F.col("src").alias("id"),
-            F.col("w.wlbl").alias("lbl"),
-            "k",
-            (F.col("mvd") | (F.col("w.wlbl") != F.col("plbl"))).alias("moved"),
-        )
-        kept = st.where(F.col("id") % 2 != phase).select("id", "lbl", "k", "moved")
-        out = moved.unionAll(kept)
-        if obs is not None:
-            # Σmoved as an ``observe`` metric on the phase-1 checkpoint —
-            # see ``louvain_phase1_labels`` (r16 opt round, guide §5).
-            out = out.observe(obs, F.sum(F.col("moved").cast("long")).alias("mv"))
-        return materialize(out)
-
-    hist = [state]
-    rounds_used, converged = 0, False
-    for _ in range(max_rounds):
-        fresh = hist[-1].select("id", "lbl", "k", F.lit(False).alias("moved"))
-        obs = Observation(f"louvain_w_probe_{rounds_used}")
-        updated = _phase(_phase(fresh, 0), 1, obs)
-        rounds_used += 1
-        changed = int(obs.get["mv"] or 0)
-        if changed == 0:
-            converged = True
-            break
-        hist.append(updated)
-    lab_all = functools.reduce(
-        DataFrame.unionByName,
-        [
-            st.select(F.lit(i).alias("r"), "id", "lbl", "k")
-            for i, st in enumerate(hist)
-        ],
-    )
-    la = lab_all.select("r", F.col("id").alias("src"), F.col("lbl").alias("la"))
-    lb = lab_all.select("r", F.col("id").alias("dst"), F.col("lbl").alias("lb"))
-    e_in_df = (
-        edges.join(la, "src")
-        .join(lb, ["dst", "r"])
-        .where(F.col("la") == F.col("lb"))
-        .groupBy("r")
-        .agg(F.sum("w").cast("long").alias("e_in"))
-    )
-    sumsq_df = (
-        lab_all.groupBy("r", "lbl")
-        .agg(F.sum("k").alias("tot"))
-        .groupBy("r")
-        .agg(F.sum(F.col("tot") * F.col("tot")).alias("sumsq"))
-    )
-    qnums = [0] * len(hist)
-    for row in sumsq_df.join(e_in_df, "r", "left").collect():
-        e_in = int(row["e_in"]) if row["e_in"] is not None else 0
-        qnums[row["r"]] = m_val * (e_in + sm_total) - int(row["sumsq"])
-    best_r = max(range(len(qnums)), key=lambda i: (qnums[i], -i))
-    if stats is not None:
-        stats["rounds"] = rounds_used
-        stats["converged"] = converged
-        stats["best_round"] = best_r
-        stats["best_qnum"] = max(qnums)
-    return hist[best_r].select("id", "lbl")
-
-
 def _modularity_round_w_sql(prev: str, name: str, phase: int) -> str:
     """Weighted phase CTE over ``sw`` (src, dst, w — coarsened
     supergraph, no self-edges), ``deg2``, ``mm2`` — the level-2 twin of
@@ -2854,7 +2692,7 @@ def sc_communities_louvain2(
     the Blondel et al. COARSENING step: level-1 communities collapse to
     supernodes (inter-community edge counts as weights, intra-community
     directed edge mass as self-mass), and the WEIGHTED phase-1 re-runs
-    on the supergraph (``louvain_phase1_weighted``).  This is the step
+    on the supergraph (``louvain_phase1_labels(weight=, selfmass=)``).  This is the step
     that escapes single-level greedy's plateau: measured on the sf0.001
     kNN graph, Q rises 0.233 → 0.372 (183 → 57 communities), matching
     the LPA partition's modularity with the actual modularity objective
@@ -2881,7 +2719,7 @@ def sc_communities_louvain2(
         .union(knn.select(F.col("nbr").alias("src"), F.col("vec_id").alias("dst")))
         .distinct()
     )
-    lv1 = materialize(louvain_phase1_labels(sym, SC_MODULARITY_ROUNDS, stats=l1_stats))
+    lv1 = louvain_phase1_labels(sym, SC_MODULARITY_ROUNDS, stats=l1_stats)
     la = lv1.select(F.col("id").alias("src"), F.col("lbl").alias("ca"))
     lb = lv1.select(F.col("id").alias("dst"), F.col("lbl").alias("cb"))
     joined = sym.join(la, "src").join(lb, "dst")
@@ -2901,9 +2739,10 @@ def sc_communities_louvain2(
         .groupBy(F.col("ca").alias("id"))
         .agg(F.count(F.lit(1)).alias("sm"))
     )
+    release(sym)
     l2_stats: dict = {}
-    lv2 = louvain_phase1_weighted(
-        sw, smass, SC_MODULARITY_ROUNDS, stats=l2_stats
+    lv2 = louvain_phase1_labels(
+        sw, SC_MODULARITY_ROUNDS, stats=l2_stats, weight="w", selfmass=smass
     )
     if stats is not None:
         stats["level1"] = l1_stats
@@ -3515,66 +3354,13 @@ def sc_notebook_e2e_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     targets that fell to the pp filters drop in the scoring join on both
     engines identically — at the registered scales ≥96% of cells keep a
     full seed fan-out and the closure reconnects the rest."""
-    wide = _notebook_wide(spark, sf_dir)
-
-    from .similarity import _dot, _norm2
-
-    n = wide.count()
-    a = materialize(
-        wide.select(
-            "vec_id",
-            F.col("embedding").alias("ea"),
-            _norm2(F.col("embedding")).alias("na"),
-        )
+    g = sc_nnd_edges(
+        nnd_vectors(_notebook_wide(spark, sf_dir)), rounds=NB_ANN_ROUNDS, k=NB_ANN_BUILD_K
     )
-    b = a.select(
-        F.col("vec_id").alias("nbr"),
-        F.col("ea").alias("eb"),
-        F.col("na").alias("nb"),
-    )
-    d2 = F.round(F.col("na") + F.col("nb") - 2 * _dot(F.col("ea"), F.col("eb")), 6)
-
-    def score(pairs: DataFrame) -> DataFrame:
-        scored = pairs.join(a, "vec_id").join(b, "nbr").select(
-            "vec_id", "nbr", d2.alias("d2")
-        )
-        rk = F.row_number().over(
-            W.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("nbr"))
-        )
-        return scored.withColumn("rk", big(rk)).where(
-            F.col("rk") <= NB_ANN_BUILD_K
-        )
-
-    seed = (
-        a.select(
-            "vec_id",
-            F.explode(F.sequence(F.lit(1), F.lit(NB_ANN_BUILD_K))).alias("j"),
-        )
-        .select("vec_id", ((F.col("vec_id") + F.col("j")) % n).alias("nbr"))
-        .where(F.col("nbr") != F.col("vec_id"))
-    )
-    g = materialize(score(seed))
-    for _ in range(NB_ANN_ROUNDS):
-        # one checkpoint per round; u's distinct rides AQE stage reuse —
-        # same fuse as ``sc_nnd_edges`` (see the comment there).
-        u = (
-            g.select("vec_id", "nbr")
-            .union(
-                g.select(F.col("nbr").alias("vec_id"), F.col("vec_id").alias("nbr"))
-            )
-            .distinct()
-        )
-        hop = (
-            u.alias("x")
-            .join(u.alias("y"), F.col("x.nbr") == F.col("y.vec_id"))
-            .select(F.col("x.vec_id").alias("vec_id"), F.col("y.nbr").alias("nbr"))
-            .where(F.col("vec_id") != F.col("nbr"))
-        )
-        g = materialize(score(u.union(hop).distinct()))
-
     knn = materialize(
         g.where(F.col("rk") <= SC_NEIGHBORS_K).select("vec_id", "nbr")
     )
+    release(g)
     return _notebook_tail(spark, knn)
 
 

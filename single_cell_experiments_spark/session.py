@@ -24,8 +24,9 @@ from __future__ import annotations
 
 import os
 import weakref
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 ENGINE_NAME = "sce-spark"
 
@@ -143,6 +144,81 @@ def materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint()
 
 
+def checkpoint_observed(df: DataFrame, *metrics: Column) -> tuple[DataFrame, dict]:
+    """``materialize(df)`` plus ``metrics`` (aggregate columns) computed by
+    the SAME checkpoint job as ``observe`` metrics — a scalar read back
+    with no extra job over the data."""
+    obs = Observation()
+    cut = materialize(df.observe(obs, *metrics))
+    return cut, obs.get
+
+
+def release(*dfs: DataFrame) -> None:
+    """Drop the checkpoint blocks behind each frame that IS a checkpoint
+    (analyzed plan a bare ``LogicalRDD``, as ``materialize`` returns);
+    any other frame is left alone.  Checkpoints already built FROM a
+    released frame keep reading — only the released frame itself must
+    not be read again."""
+    for df in dfs:
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.nodeName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    probe: Sequence[Column] | None = None,
+    *,
+    max_rounds: int,
+    must_converge: bool = False,
+) -> tuple[DataFrame, int, bool]:
+    """The one driver loop of the iterative algorithms.
+
+    Each round checkpoints ``step(state)`` through ``materialize`` and
+    releases the previous round's checkpoint once the new one is written,
+    so a loop holds one round's blocks, not all of them.  ``probe`` —
+    aggregate columns over the round's output — rides that checkpoint job
+    as ``observe`` metrics; the loop has converged when a round's probe
+    equals the previous round's, so a probe must be an invariant that is
+    stable exactly at the fixpoint (a monotone sum, an edge count, a
+    cumulative move counter).  Without a probe the loop runs
+    ``max_rounds`` rounds.
+
+    Returns ``(state, rounds, converged)``.  At the budget the loop raises
+    when ``must_converge`` — an unconverged result would be wrong — and
+    otherwise returns the budget state, for the algorithms whose oracles
+    unroll exactly ``max_rounds``."""
+    prev = None
+    for rounds in range(1, max_rounds + 1):
+        if probe is None:
+            nxt, got = materialize(step(state)), None
+        else:
+            nxt, got = checkpoint_observed(step(state), *probe)
+        release(state)
+        state = nxt
+        if got is not None and got == prev:
+            return state, rounds, True
+        prev = got
+    if must_converge:
+        raise RuntimeError(
+            f"{getattr(step, '__qualname__', step)}: no fixpoint within "
+            f"{max_rounds} rounds; raising instead of returning an "
+            f"unconverged result"
+        )
+    return state, max_rounds, False
+
+
+def _default_driver_memory() -> str:
+    """16g, capped at half of physical RAM: on a small host a 16g heap lets
+    the JVM grow until the host's OOM killer takes it."""
+    try:
+        half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 << 20)
+    except (AttributeError, ValueError, OSError):
+        return "16g"
+    return f"{min(16 << 10, half_mb)}m"
+
+
 def get_spark(
     app_name: str = ENGINE_NAME,
     cpus: int | None = None,
@@ -152,19 +228,24 @@ def get_spark(
 ) -> SparkSession:
     """Build the engine's own session (tests / bench).
 
-    ``local[N]`` with N from ``$SPARK_GRAFT_CPUS`` (default 32). On a real
-    cluster the same confs apply; only master/memory sizing changes.
+    ``local[N]`` with N from ``$SPARK_GRAFT_CPUS`` (default 32). Driver
+    memory: ``driver_memory``, else ``$SPARK_GRAFT_DRIVER_MEM``, else 16g
+    capped at half of physical RAM. On a real cluster the same confs
+    apply; only master/memory sizing changes.
     ``extra_confs`` are BUILD-TIME configs (core/scheduler settings that
     cannot be set on a live session, e.g. ``spark.speculation``) — they
     only take effect when this call actually creates the session.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or cpus
+    driver_memory = (
+        driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory()
+    )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         # files.maxPartitionBytes default 128m is right for the 100 TB
         # posture; local small files coalesce via AQE anyway.

@@ -5,6 +5,7 @@ wherever the exact neighbors are bucket-local (what the recall audit
 
 from __future__ import annotations
 
+from single_cell_experiments_spark.catalog import load_table
 from single_cell_experiments_spark.operators.singlecell import (
     SC_NEIGHBORS_K,
     sc_ivf_cells,
@@ -101,6 +102,7 @@ def test_nnd_rounds_are_monotone_and_graph_is_valid(spark):
     from single_cell_experiments_spark.operators.singlecell import (
         SC_NND_K_BUILD,
         SC_NND_ROUNDS,
+        nnd_vectors,
         sc_neighbors_nnd_recall,
         sc_nnd_edges,
     )
@@ -110,10 +112,11 @@ def test_nnd_rounds_are_monotone_and_graph_is_valid(spark):
         for r in sc_neighbor_edges(spark, SF_DIR).collect()
     }
 
+    vecs = nnd_vectors(load_table(spark, SF_DIR, "embeddings"))
     prev_hits = -1
     final_edges = None
     for rounds in range(SC_NND_ROUNDS + 1):
-        edges = sc_nnd_edges(spark, SF_DIR, rounds=rounds).collect()
+        edges = sc_nnd_edges(vecs, rounds=rounds).collect()
         hits = sum((int(r.vec_id), int(r.nbr)) in exact for r in edges)
         assert hits >= prev_hits, f"recall dropped at round {rounds}"
         prev_hits = hits
@@ -145,6 +148,7 @@ def test_ivfseed_descent_beats_ring_seed_and_bucket_ceiling(spark):
     (a) the ring-only descent at its default rounds and (b) the IVF
     bucket ceiling (edges whose endpoints share a coarse cell)."""
     from single_cell_experiments_spark.operators.singlecell import (
+        nnd_vectors,
         sc_nnd_edges,
         sc_nnd_edges_ivfseed,
     )
@@ -154,7 +158,8 @@ def test_ivfseed_descent_beats_ring_seed_and_bucket_ceiling(spark):
         for r in sc_neighbor_edges(spark, SF_DIR).collect()
     }
     ring = {
-        (int(r.vec_id), int(r.nbr)) for r in sc_nnd_edges(spark, SF_DIR).collect()
+        (int(r.vec_id), int(r.nbr))
+        for r in sc_nnd_edges(nnd_vectors(load_table(spark, SF_DIR, "embeddings"))).collect()
     }
     comb = {
         (int(r.vec_id), int(r.nbr))

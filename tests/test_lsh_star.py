@@ -139,3 +139,26 @@ def test_default_cap_star_equals_plain_minhash(spark):
     assert {(r.doc1, r.doc2, r.jaccard) for r in star} == {
         (r.doc1, r.doc2, r.jaccard) for r in plain
     }
+
+
+def test_staged_cascade_rejects_unknown_score(spark):
+    """The scoring tails are a closed set: a misspelled ``score`` raises
+    instead of silently running the Jaccard tail."""
+    from single_cell_experiments_spark.operators.dedup import lsh_pairs_staged
+
+    docs = spark.createDataFrame(_docs())
+    with pytest.raises(ValueError, match="unknown score 'jacard'"):
+        lsh_pairs_staged(spark, docs, score="jacard")
+
+
+def test_staged_cascade_matches_one_statement_form(spark):
+    """The staged cascade (shareable-doc set checkpointed and broadcast
+    into the verify semi-join, intermediate checkpoints released) returns
+    exactly the one-statement Spark form's pairs, star tier included."""
+    from single_cell_experiments_spark.operators.dedup import lsh_pairs_staged
+
+    pdf = _docs()
+    spark.createDataFrame(pdf).createOrReplaceTempView("__docs")
+    want = spark.sql(_lsh_star_sql(_SPARK_SHINGLES, cap=2, ln="size")).collect()
+    got = lsh_pairs_staged(spark, spark.createDataFrame(pdf), cap=2, star=True).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))

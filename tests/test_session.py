@@ -9,7 +9,10 @@ perf confs apply only on a session's FIRST tune.
 
 from __future__ import annotations
 
-from single_cell_experiments_spark.session import CORRECTNESS_CONFS, PERF_CONFS, tune
+import pytest
+from pyspark.sql import functions as F
+
+from single_cell_experiments_spark.session import CORRECTNESS_CONFS, PERF_CONFS, fixpoint, tune
 
 
 def test_tune_preserves_owner_perf_overrides(spark):
@@ -90,3 +93,109 @@ def test_materialize_local_and_reliable_checkpoint(spark, tmp_path):
         assert ckpt_files, "reliable checkpoint must write durable files"
     finally:
         spark.conf.set("spark.sce.reliableCheckpoint", "false")
+
+
+def _count_up(df):
+    return df.select((F.col("v") + 1).alias("v"))
+
+
+def test_fixpoint_must_converge_raises_at_budget(spark):
+    """A loop whose probe never repeats hits ``max_rounds``; a caller that
+    must converge gets the driver's one non-convergence error."""
+    with pytest.raises(RuntimeError, match="no fixpoint within 3 rounds"):
+        fixpoint(
+            spark.range(4).select(F.col("id").alias("v")),
+            _count_up,
+            [F.sum("v").alias("s")],
+            max_rounds=3,
+            must_converge=True,
+        )
+
+
+def test_fixpoint_budgeted_loop_returns_at_cap(spark):
+    """Budgeted loops (LPA, Louvain, k-core: oracles unroll exactly
+    ``max_rounds``) get the budget state back, flagged unconverged; a
+    probe that repeats exits early, flagged converged."""
+    start = spark.range(4).select(F.col("id").alias("v"))
+    out, rounds, converged = fixpoint(start, _count_up, [F.sum("v").alias("s")], max_rounds=3)
+    assert (rounds, converged) == (3, False)
+    assert sorted(r.v for r in out.collect()) == [3, 4, 5, 6]
+
+    capped = lambda df: df.select(F.least(F.col("v") + 1, F.lit(2)).alias("v"))  # noqa: E731
+    out, rounds, converged = fixpoint(start, capped, [F.sum("v").alias("s")], max_rounds=10)
+    # round 2 lifts every value to the cap; round 3 repeats it
+    assert converged and rounds == 3
+    assert sorted(r.v for r in out.collect()) == [2, 2, 2, 2]
+
+
+def _persisted(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _checkpoint_leaves(df) -> int:
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return sum(leaves.apply(i).nodeName() == "LogicalRDD" for i in range(leaves.size()))
+
+
+def _kernel_cc_star(spark):
+    from single_cell_experiments_spark.operators.dedup import cc_star_labels
+
+    pairs = [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21)]
+    return cc_star_labels(spark.createDataFrame(pairs, "doc1 long, doc2 long"))
+
+
+def _sym(pairs):
+    return sorted({(u, v) for a, b in pairs for u, v in ((a, b), (b, a))})
+
+
+_GRAPH = [(0, 1), (1, 2), (0, 2), (2, 3), (3, 4), (4, 5), (3, 5), (6, 7), (7, 8), (6, 8)]
+
+
+def _kernel_lpa(spark):
+    from single_cell_experiments_spark.operators.singlecell import lpa_labels
+
+    edges = _sym(_GRAPH) + [(v, v) for v in range(9)]
+    return lpa_labels(spark.createDataFrame(edges, "src long, dst long"), 6)
+
+
+def _kernel_louvain(spark):
+    from single_cell_experiments_spark.operators.singlecell import louvain_phase1_labels
+
+    return louvain_phase1_labels(spark.createDataFrame(_sym(_GRAPH), "src long, dst long"), 6)
+
+
+def _kernel_nnd(spark):
+    from single_cell_experiments_spark.operators.singlecell import nnd_vectors, sc_nnd_edges
+
+    rows = [(i, [float(i * 7 % 11), float(i * 5 % 13)]) for i in range(24)]
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    return sc_nnd_edges(nnd_vectors(vecs), rounds=2, k=4)
+
+
+@pytest.mark.parametrize(
+    "kernel", [_kernel_cc_star, _kernel_lpa, _kernel_louvain, _kernel_nnd],
+    ids=["cc_star_labels", "lpa_labels", "louvain_phase1_labels", "sc_nnd_edges"],
+)
+def test_loop_kernels_release_dead_rounds(spark, kernel):
+    """No checkpoint outlives the loop that made it: with the result still
+    held (so nothing is garbage-collected), the RDDs the call left
+    registered are no more than the checkpoints its returned plan reads —
+    every earlier round was released as the next one was written.  The
+    result must still read after the releases."""
+    before = _persisted(spark)
+    out = kernel(spark)
+    assert len(_persisted(spark) - before) <= _checkpoint_leaves(out)
+    assert out.count() > 0
+
+
+def test_default_driver_memory_is_capped_at_half_of_ram():
+    """16g unless the host has under 32 GB, then half of physical RAM:
+    a 16g heap on a 16 GB host lets the JVM grow until the OOM killer
+    takes it."""
+    import os
+
+    from single_cell_experiments_spark.session import _default_driver_memory
+
+    mb = int(_default_driver_memory().rstrip("m"))
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1 << 20)
+    assert mb == min(16 << 10, ram_mb // 2)

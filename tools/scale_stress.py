@@ -224,7 +224,6 @@ def louvain2_stress(spark, src_dir: str, out_dir: str, k: int) -> dict:
         SC_IVF_FINE_BITS,
         SC_MODULARITY_ROUNDS,
         louvain_phase1_labels,
-        louvain_phase1_weighted,
         sc_ivf_cells_fine,
         sc_neighbor_edges,
     )
@@ -277,7 +276,9 @@ def louvain2_stress(spark, src_dir: str, out_dir: str, k: int) -> dict:
         .agg(F.count(F.lit(1)).alias("sm"))
     )
     l2_stats: dict = {}
-    lv2 = louvain_phase1_weighted(sw, smass, SC_MODULARITY_ROUNDS, stats=l2_stats)
+    lv2 = louvain_phase1_labels(
+        sw, SC_MODULARITY_ROUNDS, stats=l2_stats, weight="w", selfmass=smass
+    )
     n_l2 = lv2.select("lbl").distinct().count()
     t_l2 = time.perf_counter() - t0
 
