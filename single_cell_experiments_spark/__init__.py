@@ -21,7 +21,9 @@ Layout
                    text analysis, as-of join, multimodal plumbing, MLlib ops
 - ``functions/`` : cross-engine-deterministic helpers (decimal aggregation,
                    polynomial string hashing) + scalar function coverage
-- ``sources/``   : parquet catalog + a Zarr-style chunk-manifest reader stub
+- ``sources/``   : Zarr v2/v3 read + write behind one format interface
+                   (``zarr`` core, ``zarrv2``/``zarrv3`` formats, ``pyds``
+                   Spark DataSource), sparse CSR/CSC, 10x HDF5, sinks
 - ``plans/``     : plan-inspection helpers (pushdown / broadcast assertions)
 - ``streaming/`` : Structured Streaming jobs + batch-equivalent oracles
 """

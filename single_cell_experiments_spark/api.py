@@ -42,6 +42,7 @@ the registered kernels to 1e-9 on the driver tables.
 from __future__ import annotations
 
 import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
@@ -50,38 +51,39 @@ from pyspark.sql import functions as F
 _DBL = lambda c: c.cast("double")  # noqa: E731
 
 
-def _write_var_arrays(
-    var: DataFrame, path: str, prefix: str, writable: tuple, comp: dict
-) -> None:
+def _write_var_arrays(var: DataFrame, path: str, prefix: str, writable: tuple, fmt) -> None:
     """Write a (pos, ...) per-gene annotation frame as ``<prefix><col>``
-    1-D Zarr v2 arrays — driver-side on purpose: var is O(genes), the
-    axis the reference broadcasts too.  Shared by ``to_zarr`` for both
-    the main ``var_*`` columns and the raw snapshot's ``raw_var_*``."""
+    1-D one-chunk arrays of format ``fmt`` — driver-side on purpose: var is
+    O(genes), the axis the reference broadcasts too.  Shared by ``to_zarr``
+    for both the main ``var_*`` columns and the raw snapshot's
+    ``raw_var_*``."""
     import numpy as np
 
-    from .sources.zarrv2 import _compress, _write_zarray_meta
-
     rows = var.orderBy("pos").collect()
-    dtypes = dict(var.dtypes)
-    for c in var.columns:
-        t = dtypes[c]
+    for c, t in var.dtypes:
         if c == "pos" or t not in writable:
             continue
-        apath = os.path.join(path, f"{prefix}{c}")
+        vals = [r[c] for r in rows]
+        width = 1
         if t == "string":
-            vals = [(r[c] or "").encode("utf-8") for r in rows]
-            w = max(max((len(v) for v in vals), default=1), 1)
-            npdt = np.dtype(f"S{w}")
-            arr = np.array(vals, dtype=npdt)
-            zdt, fill = f"|S{w}", None
-        else:
-            is_int = t in ("bigint", "int", "smallint", "tinyint", "long")
-            npdt = np.dtype("<i8") if is_int else np.dtype("<f8")
-            arr = np.array([r[c] for r in rows], dtype=npdt)
-            zdt, fill = str(npdt.str), 0
-        _write_zarray_meta(apath, [len(arr)], [max(len(arr), 1)], zdt, comp, fill)
-        with open(os.path.join(apath, "0"), "wb") as f:
-            f.write(_compress(arr.tobytes(order="C"), comp, npdt.itemsize))
+            vals = [(v or "").encode("utf-8") for v in vals]
+            width = max(max((len(v) for v in vals), default=1), 1)
+        dtype, fill = fmt.column_dtype(t, width)
+        arr = np.array(vals, dtype=dtype)
+        apath = os.path.join(path, f"{prefix}{c}")
+        meta = fmt.write_array_meta(apath, [len(arr)], [max(len(arr), 1)], dtype, fill)
+        fmt.write_chunk(apath, meta, (0,), arr)
+
+
+def _member_key(kind: str, name: str) -> str:
+    """Store key of a ``kind`` member; names become paths, so refuse
+    anything but a safe key."""
+    if not re.fullmatch(r"[A-Za-z0-9_.\-]+", name):
+        raise ValueError(
+            f"{kind} member name {name!r} is not a safe store"
+            " key (allowed: letters, digits, _ . -)"
+        )
+    return f"{kind}_{name}"
 
 
 class AnnFrame:
@@ -222,53 +224,40 @@ class AnnFrame:
     @classmethod
     def from_zarr(cls, spark: SparkSession, group_path: str) -> "AnnFrame":
         """Load a Zarr v2 group written by ``to_zarr`` /
-        ``sources.zarrv2.write_zarr_group`` (``X`` matrix + ``vec_id``
+        ``sources.zarr.write_zarr_group`` (``X`` matrix + ``vec_id``
         index; ref ``AnnDataRdd.from_zarr`` [M]).  Chunk objects are
         listed and decoded executor-side; column-chunked grids reassemble
         on ``row``.
 
         Consolidated-aware: when the group carries ``.zmetadata``
-        (``sources.zarrv2.consolidate_metadata``), BOTH the member
+        (``sources.zarr.consolidate_metadata``), BOTH the member
         discovery (which obs_/var_ arrays exist) and every array's
         metadata come from that ONE document — no per-array ``.zarray``
         reads, no directory listing for metadata; unconsolidated groups
         fall back to the per-array path unchanged."""
-        from .sources.zarrv2 import (
-            _plan_matrix_read,
-            _plan_vector_read,
-            _validate_v2_meta,
-            read_consolidated_meta,
-            read_zarr_matrix,
-            read_zarr_vector,
-        )
+        from .sources.zarr import consolidated_array_meta, plan_zarr_read
+        from .sources.zarrv2 import V2
 
+        fmt = V2()
         try:
-            md = read_consolidated_meta(group_path)
+            md = fmt.read_consolidated(group_path)
         except FileNotFoundError:
             md = None
 
-        def _consolidated_meta(arr: str) -> dict:
-            key = f"{arr}/.zarray"
-            if key not in md:
-                raise KeyError(
-                    f"consolidated metadata at {group_path} has no entry for"
-                    f" required array {arr!r} ({key} missing) — the store's"
-                    f" .zmetadata is stale or the group layout is not the"
-                    f" flat AnnData shape this reader expects"
-                )
-            return _validate_v2_meta(md[key], f"{group_path}:{arr}")
+        def _read(arr: str, ndim: int):
+            apath = os.path.join(group_path, arr)
+            meta = (
+                fmt.read_meta(apath)
+                if md is None
+                else consolidated_array_meta(fmt, group_path, arr, md)
+            )
+            return plan_zarr_read(spark, fmt, apath, meta, ndim)
 
         def _matrix(arr: str):
-            if md is not None:
-                meta = _consolidated_meta(arr)
-                return _plan_matrix_read(spark, os.path.join(group_path, arr), meta)
-            return read_zarr_matrix(spark, os.path.join(group_path, arr))
+            return _read(arr, 2)
 
         def _vector(arr: str):
-            if md is not None:
-                meta = _consolidated_meta(arr)
-                return _plan_vector_read(spark, os.path.join(group_path, arr), meta)
-            return read_zarr_vector(spark, os.path.join(group_path, arr))
+            return _read(arr, 1)
 
         if md is not None:
             # Top-level arrays only (key shape "<name>/.zarray").  Nested
@@ -433,9 +422,7 @@ class AnnFrame:
                     spark, os.path.join(group_path, f"obsp_{name}")
                 )
         # uns from the group attributes (.zattrs; consolidated-aware)
-        from .sources.zarrv2 import read_group_attrs
-
-        attrs = md.get(".zattrs", {}) if md is not None else read_group_attrs(group_path)
+        attrs = md.get(".zattrs", {}) if md is not None else fmt.read_group_attrs(group_path)
         uns = attrs.get("uns", {}) if isinstance(attrs, dict) else {}
         out = cls(x, obs, var, obsm, uns, layers, varm, obsp)
         # raw snapshot (AnnData .raw): a raw_X member + raw_var_* arrays
@@ -497,7 +484,12 @@ class AnnFrame:
         )
 
     def to_zarr(
-        self, path: str, rows_per_chunk: int = 64, sparse: bool = False, **kw
+        self,
+        path: str,
+        rows_per_chunk: int = 64,
+        sparse: bool = False,
+        fmt=None,
+        cols_per_chunk: int | None = None,
     ) -> dict:
         """Write ``X`` + row index + numeric AND string/categorical ``obs``
         annotation columns as a Zarr v2 group (ref ``AnnDataRdd.to_zarr``
@@ -509,7 +501,9 @@ class AnnFrame:
         JSON (r14 verdict #1), so the full AnnData component set
         (X/obs/var/obsm/uns) survives a write→read cycle.  Requires dense
         0..n-1 row ids (positional addressing — reindex first if
-        filtered).
+        filtered).  ``fmt`` is the ``zarrv2.V2`` format value every array
+        is written with (default: zlib chunks); ``cols_per_chunk`` splits
+        ``X`` into a 2-D chunk grid.
 
         ``sparse=True`` stores ``X`` in the AnnData ``csr_matrix`` group
         encoding (``indptr``/``indices``/``data`` members, zeros
@@ -523,8 +517,11 @@ class AnnFrame:
         sentinel, so the two are indistinguishable after a round-trip
         (the v3 dict-encoded path reserves code -1 if NULL fidelity
         matters)."""
-        from .sources.zarrv2 import write_zarr_group
+        from .sources.sparse import write_zarr_csr
+        from .sources.zarr import write_zarr_group, write_zarr_obsm_member
+        from .sources.zarrv2 import V2
 
+        fmt = fmt or V2()
         numeric = ("bigint", "int", "smallint", "tinyint", "long", "double", "float")
         writable = numeric + ("string",)
         obs_cols = tuple(
@@ -541,14 +538,13 @@ class AnnFrame:
         info = write_zarr_group(
             wide,
             path,
+            fmt,
             rows_per_chunk=rows_per_chunk,
+            cols_per_chunk=cols_per_chunk,
             obs_cols=obs_cols,
             skip_x=sparse,
-            **kw,
         )
         if sparse:
-            from .sources.sparse import write_zarr_csr
-
             # X as the AnnData csr_matrix subgroup: nonzero entries only
             # (float32-quantized first, like the dense array's <f4 cells,
             # so both storage modes round-trip the same values)
@@ -571,100 +567,57 @@ class AnnFrame:
                 os.path.join(path, "X"),
                 int(info["shape"][0]),
                 int(info["shape"][1]),
-                compressor=kw.get("compressor", {"id": "zlib", "level": 1}),
+                fmt=fmt,
             )
             info = {**info, "nnz": csr_info["nnz"], "x_encoding": "csr_matrix"}
         # var annotations are O(genes): written driver-side as var_* 1-D
         # arrays (the reference broadcasts var the same way — per-gene data
         # never needs a distributed write)
         if self.var is not None:
-            _write_var_arrays(
-                self.var, path, "var_", writable,
-                kw.get("compressor", {"id": "zlib", "level": 1}),
+            _write_var_arrays(self.var, path, "var_", writable, fmt)
+        # obsm/layers members: computed per-cell matrices (X_pca / X_umap
+        # ...) as 2-D float64 <kind>_<name> arrays — distributed chunk writes
+        # like X (the write→compute→write cycle the notebook capstone
+        # implies).  varm members are per-GENE matrices (loadings,
+        # varm['PCs']): rows are gene positions, so the member's row count
+        # is the matrix WIDTH; same writer, pos as row_id.  raw_X is the
+        # pre-subset snapshot (AnnData ``.raw``): one row per cell, width
+        # independent of X's.
+        n_rows, n_genes = int(info["shape"][0]), int(info["shape"][1])
+        members = [
+            (_member_key(kind, name), frame[name].select("row_id", "values"), n_rows)
+            for kind, frame in (("obsm", self.obsm), ("layers", self.layers))
+            for name in sorted(frame)
+        ]
+        members += [
+            (
+                _member_key("varm", name),
+                self.varm[name].select(F.col("pos").alias("row_id"), "values"),
+                n_genes,
             )
-        # obsm members: computed per-cell matrices (X_pca / X_umap ...) as
-        # 2-D float64 obsm_<name> arrays — distributed chunk writes like X
-        # (r14 verdict #1: the write→compute→write cycle the notebook
-        # capstone implies).  uns: one JSON attrs document at the root.
-        if self.obsm or self.uns or self.layers or self.varm or self.obsp:
-            import re
-
-            from .sources.zarrv2 import (
-                _DEFAULT_COMPRESSOR,
-                write_group_attrs,
-                write_zarr_obsm_member,
-            )
-
-            comp = kw.get("compressor", _DEFAULT_COMPRESSOR)
-            n_rows = int(info["shape"][0])
-            n_genes = int(info["shape"][1])
-
-            def _check_key(prefix: str, name: str) -> None:
-                if not re.fullmatch(r"[A-Za-z0-9_.\-]+", name):
-                    raise ValueError(
-                        f"{prefix} member name {name!r} is not a safe store"
-                        " key (allowed: letters, digits, _ . -)"
-                    )
-
-            for prefix, members in (("obsm", self.obsm), ("layers", self.layers)):
-                for name in sorted(members):
-                    _check_key(prefix, name)
-                    write_zarr_obsm_member(
-                        members[name].select("row_id", "values"),
-                        os.path.join(path, f"{prefix}_{name}"),
-                        n_rows,
-                        rows_per_chunk=rows_per_chunk,
-                        compressor=comp,
-                    )
-            # varm members: per-GENE matrices (loadings, varm['PCs']) —
-            # rows are gene positions, so the member's row count is the
-            # matrix WIDTH; same distributed chunk writer, pos as row_id.
-            for name in sorted(self.varm):
-                _check_key("varm", name)
-                write_zarr_obsm_member(
-                    self.varm[name].select(
-                        F.col("pos").alias("row_id"), "values"
-                    ),
-                    os.path.join(path, f"varm_{name}"),
-                    n_genes,
-                    rows_per_chunk=rows_per_chunk,
-                    compressor=comp,
-                )
-            # obsp members: sparse cell×cell pairwise matrices (the
-            # neighbor graph) in the AnnData csr_matrix group encoding —
-            # bytes ~ nnz (n·k for a kNN graph), never n² dense.
-            if self.obsp:
-                from .sources.sparse import write_zarr_csr
-
-                for name in sorted(self.obsp):
-                    _check_key("obsp", name)
-                    write_zarr_csr(
-                        self.obsp[name].select("row_id", "col", "v"),
-                        os.path.join(path, f"obsp_{name}"),
-                        n_rows,
-                        n_rows,
-                        compressor=kw.get("compressor", {"id": "zlib", "level": 1}),
-                    )
-            if self.uns:
-                write_group_attrs(path, {"uns": self.uns})
-        # raw: the pre-subset snapshot (AnnData ``.raw``) — a full-width
-        # float64 raw_X member (same distributed chunk writer; one row per
-        # cell, width independent of X's) plus driver-side raw_var_* arrays.
+            for name in sorted(self.varm)
+        ]
         if self.raw is not None:
-            from .sources.zarrv2 import _DEFAULT_COMPRESSOR, write_zarr_obsm_member
-
+            members.append(("raw_X", self.raw.x.select("row_id", "values"), n_rows))
+        for key, frame, n in members:
             write_zarr_obsm_member(
-                self.raw.x.select("row_id", "values"),
-                os.path.join(path, "raw_X"),
-                int(info["shape"][0]),
-                rows_per_chunk=rows_per_chunk,
-                compressor=kw.get("compressor", _DEFAULT_COMPRESSOR),
+                frame, os.path.join(path, key), n, fmt, rows_per_chunk=rows_per_chunk
             )
-            if self.raw.var is not None:
-                _write_var_arrays(
-                    self.raw.var, path, "raw_var_", writable,
-                    kw.get("compressor", {"id": "zlib", "level": 1}),
-                )
+        # obsp members: sparse cell×cell pairwise matrices (the neighbor
+        # graph) in the AnnData csr_matrix group encoding — bytes ~ nnz
+        # (n·k for a kNN graph), never n² dense.
+        for name in sorted(self.obsp):
+            write_zarr_csr(
+                self.obsp[name].select("row_id", "col", "v"),
+                os.path.join(path, _member_key("obsp", name)),
+                n_rows,
+                n_rows,
+                fmt=fmt,
+            )
+        if self.uns:  # uns: the group's attributes document
+            fmt.write_group_attrs(path, {"uns": self.uns})
+        if self.raw is not None and self.raw.var is not None:
+            _write_var_arrays(self.raw.var, path, "raw_var_", writable, fmt)
         return info
 
     def reindex(self) -> "AnnFrame":

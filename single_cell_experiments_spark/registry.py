@@ -122,7 +122,7 @@ def _load_all_operator_modules() -> None:
         pipeline,
     )
     from .functions import scalar  # noqa: F401
-    from .sources import chunkstore, pyds, sinks, sparse, tenx, zarrv2, zarrv3  # noqa: F401
+    from .sources import chunkstore, pyds, sinks, sparse, tenx, zarr, zarrv2, zarrv3  # noqa: F401
     from .streaming import batch_equiv, jobs  # noqa: F401
 
 

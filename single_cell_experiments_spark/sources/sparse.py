@@ -1,4 +1,4 @@
-"""Sparse CSR matrix encoding for the Zarr v2 group (r14 verdict #2).
+"""Sparse CSR/CSC matrix encoding for the Zarr group (r14 verdict #2).
 
 AnnData ships real 10x matrices sparse: the group ``X`` is not one dense
 2-D array but a subgroup of three 1-D arrays — ``indptr`` (int64,
@@ -7,16 +7,18 @@ n_rows+1 row extents), ``indices`` (int64, nnz column indices), ``data``
 group's ``.zattrs`` (the public AnnData on-disk spec; the reference's
 flagship 1.3M-neuron matrix is ~93% zeros, so dense rows would be ~30×
 the bytes).  This module writes and reads that encoding with the same
-distributed chunk machinery as the dense writer (``zarrv2.py``):
+distributed chunk machinery as the dense writer (``zarr.py``):
 
 - **write**: two passes, both O(nnz) shuffle and O(partitions) driver
   state — (1) per-row counts → exclusive prefix offsets via the
   range-partitioned prefix-sum pattern (``api.AnnFrame.reindex``'s
   shape: per-partition totals to the driver, never O(rows) driver
   state), giving every entry its global FLAT position; (2) entries
-  keyed by ``flat div chunk`` → ``applyInPandas`` writes one
+  keyed by ``flat div chunk`` → ``zarr.write_row_chunks`` writes one
   ``indices`` + one ``data`` chunk object per grid cell.  ``indptr``
   is the same prefix-sum vector written through the same chunk writer.
+  The member arrays, the group document and its encoding attributes are
+  written in the format value ``fmt`` (default ``zarrv2.V2()``).
 - **read**: ``indptr`` rebuilds per-row extents with a self-join on
   ``i+1`` (equi-join, no global window), ``sequence``+``explode``
   enumerates each row's flat positions, and two flat-keyed equi-joins
@@ -29,26 +31,18 @@ encoding; SCALE.md records the measured dense-vs-CSR byte ratio.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
 import shutil
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
 from ..catalog import load_table
 from ..registry import query
-from .zarrv2 import (
-    _DEFAULT_COMPRESSOR,
-    _compress,
-    _write_zarray_meta,
-    read_zarr_vector,
-)
+from .zarr import ZarrFormat, read_group_attrs, read_zarr_vector, scratch_store, write_row_chunks
+from .zarrv2 import V2
 
 #: entries per chunk object for the three CSR arrays — sized so one
 #: compressed object is a few hundred KB at float64, the object-store
@@ -92,34 +86,16 @@ def _write_chunked_vectors(
     specs: list[tuple[str, str, str]],
     n: int,
     chunk: int,
-    compressor: dict | None,
+    fmt: ZarrFormat,
 ) -> int:
     """Write one or more 1-D arrays in ONE distributed pass: ``entries``
     carries (idx, <col per spec>); each spec is (src_col, array_path,
-    dtype in {'<i8','<f8'}).  Metadata is written driver-side first;
-    each ``applyInPandas`` task scatters its slice into padded blocks
-    and emits every array's chunk object for its grid cell."""
-    for _src, apath, dt in specs:
-        _write_zarray_meta(apath, [n], [chunk], dt, compressor, 0)
-    result_schema = StructType([StructField("chunk_id", LongType())])
-    plan = [(src, apath, np.dtype(dt)) for src, apath, dt in specs]
-
-    def _write_chunk(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        (chunk_id,) = key
-        offs = pdf["idx"].to_numpy(dtype=np.int64) - chunk_id * chunk
-        for src, apath, npdt in plan:
-            block = np.zeros(chunk, dtype=npdt)
-            block[offs] = pdf[src].to_numpy(dtype=npdt)
-            with open(os.path.join(apath, f"{chunk_id}"), "wb") as f:
-                f.write(_compress(block.tobytes(order="C"), compressor, npdt.itemsize))
-        return pd.DataFrame({"chunk_id": [chunk_id]})
-
-    return (
-        entries.withColumn("chunk_id", F.expr(f"idx div {chunk}"))
-        .groupBy("chunk_id")
-        .applyInPandas(_write_chunk, schema=result_schema)
-        .count()
-    )
+    dtype in {'<i8','<f8'})."""
+    arrays = [
+        (src, apath, fmt.document([n], [chunk], np.dtype(dt), 0))
+        for src, apath, dt in specs
+    ]
+    return write_row_chunks(entries, "idx", arrays, fmt, chunk)
 
 
 def write_zarr_csr(
@@ -128,7 +104,7 @@ def write_zarr_csr(
     n_rows: int,
     n_cols: int,
     entries_per_chunk: int = CSR_ENTRIES_PER_CHUNK,
-    compressor: dict | None = _DEFAULT_COMPRESSOR,
+    fmt: ZarrFormat | None = None,
 ) -> dict:
     """Write COO ``(row_id, col, v)`` (0-based dense row space 0..n_rows-1,
     0-based cols < n_cols; absent pairs are zeros) as an AnnData-encoded
@@ -137,6 +113,7 @@ def write_zarr_csr(
     All-zero rows are legal (their indptr extent is empty).  Within a
     row, entries order by ``col`` — the canonical CSR layout.  Returns
     {shape, nnz, n_chunks}."""
+    fmt = fmt or V2()
     spark = coo.sparkSession
     shutil.rmtree(group_path, ignore_errors=True)
     os.makedirs(group_path, exist_ok=True)
@@ -180,7 +157,7 @@ def write_zarr_csr(
         [("p", os.path.join(group_path, "indptr"), "<i8")],
         n_rows + 1,
         entries_per_chunk,
-        compressor,
+        fmt,
     )
 
     # every entry's flat position = its row's offset + rank-within-row
@@ -197,12 +174,10 @@ def write_zarr_csr(
         ],
         max(nnz, 1),
         entries_per_chunk,
-        compressor,
+        fmt,
     )
-    with open(os.path.join(group_path, ".zgroup"), "w") as f:
-        json.dump({"zarr_format": 2}, f)
-    with open(os.path.join(group_path, ".zattrs"), "w") as f:
-        json.dump({**_CSR_ATTRS, "shape": [n_rows, n_cols]}, f, sort_keys=True)
+    fmt.write_group_meta(group_path)
+    fmt.write_group_attrs(group_path, {**_CSR_ATTRS, "shape": [n_rows, n_cols]})
     return {"shape": [n_rows, n_cols], "nnz": nnz, "n_chunks": int(n_chunks)}
 
 
@@ -237,8 +212,7 @@ def _read_compressed_axis(
 
 
 def _validated_attrs(group_path: str, want: str) -> dict:
-    with open(os.path.join(group_path, ".zattrs")) as f:
-        attrs = json.load(f)
+    attrs = read_group_attrs(group_path)
     if attrs.get("encoding-type") != want:
         raise ValueError(
             f"not a {want} group: {group_path} (encoding-type ="
@@ -273,7 +247,7 @@ def write_zarr_csc(
     n_rows: int,
     n_cols: int,
     entries_per_chunk: int = CSR_ENTRIES_PER_CHUNK,
-    compressor: dict | None = _DEFAULT_COMPRESSOR,
+    fmt: ZarrFormat | None = None,
 ) -> dict:
     """Write COO ``(row_id, col, v)`` in the AnnData ``csc_matrix`` group
     encoding: ``indptr`` spans COLUMNS, ``indices`` holds row ids, entries
@@ -282,6 +256,7 @@ def write_zarr_csc(
     attrs re-tagged with the csc encoding and the UNtransposed shape —
     byte-level the members are exactly what the spec says a CSC group
     holds."""
+    fmt = fmt or V2()
     info = write_zarr_csr(
         coo.select(
             F.col("col").alias("row_id"), F.col("row_id").alias("col"), "v"
@@ -290,18 +265,12 @@ def write_zarr_csc(
         n_cols,
         n_rows,
         entries_per_chunk=entries_per_chunk,
-        compressor=compressor,
+        fmt=fmt,
     )
-    with open(os.path.join(group_path, ".zattrs"), "w") as f:
-        json.dump(
-            {
-                "encoding-type": "csc_matrix",
-                "encoding-version": "0.1.0",
-                "shape": [n_rows, n_cols],
-            },
-            f,
-            sort_keys=True,
-        )
+    fmt.write_group_attrs(
+        group_path,
+        {"encoding-type": "csc_matrix", "encoding-version": "0.1.0", "shape": [n_rows, n_cols]},
+    )
     return {"shape": [n_rows, n_cols], "nnz": info["nnz"], "n_chunks": info["n_chunks"]}
 
 
@@ -332,8 +301,6 @@ def zarr_sparse_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     float64 ``data`` round-trips the values exactly (rounded to 6 only
     for the oracle's formatting, like every zarr roundtrip); bytes scale
     with nnz, not n×d — the measured ratio is a SCALE.md row."""
-    import tempfile
-
     e = load_table(spark, sf_dir, "embeddings")
     dim = int(e.agg(F.max(F.size("embedding"))).collect()[0][0])
     n = e.count()
@@ -346,10 +313,7 @@ def zarr_sparse_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("v") > 0.25)
     )
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"sce_zarr_csr_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
-    )
+    store = scratch_store("sce_zarr_csr", sf_dir)
     write_zarr_csr(coo, store, n, dim)
     back = read_zarr_csr(spark, store)
     return back.select(
@@ -388,8 +352,6 @@ def zarr_csc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the recovered COO against the oracle's direct sparsification.  The
     on-disk members are byte-level what the AnnData spec says a
     ``csc_matrix`` group holds; bytes scale with nnz either way."""
-    import tempfile
-
     e = load_table(spark, sf_dir, "embeddings")
     dim = int(e.agg(F.max(F.size("embedding"))).collect()[0][0])
     n = e.count()
@@ -402,10 +364,7 @@ def zarr_csc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("v") < -0.25)
     )
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"sce_zarr_csc_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
-    )
+    store = scratch_store("sce_zarr_csc", sf_dir)
     write_zarr_csc(coo, store, n, dim)
     back = read_zarr_csc(spark, store)
     return back.select(

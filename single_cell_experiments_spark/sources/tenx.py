@@ -372,7 +372,9 @@ def migrate_csc_to_zarr(
     ``out_path`` → connector read-back as (vec_id, pos, v) COO.  The core
     of ``tenx_to_zarr_migrate`` (see its docstring for the scale
     contract); callable on any ``CscStore`` backend (h5/npz)."""
-    from .zarrv2 import _DEFAULT_COMPRESSOR, write_zarr_group
+    from .pyds import read_zarr_group_coo
+    from .zarr import write_zarr_group
+    from .zarrv2 import V2
 
     n_genes, n_cells = store.shape()
     coo = ingest_csc(spark, store, target_nnz_per_slice=target_nnz_per_slice)
@@ -393,10 +395,7 @@ def migrate_csc_to_zarr(
     )
 
     kw = {} if rows_per_chunk is None else {"rows_per_chunk": rows_per_chunk}
-    write_zarr_group(wide, out_path, compressor=_DEFAULT_COMPRESSOR, **kw)
-
-    from .pyds import read_zarr_group_coo
-
+    write_zarr_group(wide, out_path, V2(), **kw)
     return read_zarr_group_coo(spark, out_path)
 
 

@@ -1,70 +1,65 @@
-"""Native Zarr v2 store: spec-faithful parallel write + parallel read
-(SURVEY.md §2.A A1 ``zarr read``, A2 ``zarr write``; ref ``zarr_spark.py``
-[M] reads/writes real Zarr arrays — the npz ``chunkstore`` proved the
-chunk-manifest → ``mapInPandas`` shape, this module speaks the actual
-format).
+"""Zarr v2 — the ``ZarrFormat`` for the first format generation (public
+spec, zarr-specs v2), plus the registered v2 roundtrip queries.  The
+reader, writers and consolidation driver are format-agnostic and live in
+``zarr.py``; this module holds only what v2 does differently:
 
-Zarr v2 layout (public spec, zarr-specs v2):
-
-- per-array directory with a ``.zarray`` JSON: ``shape``, ``chunks``,
-  ``dtype`` (numpy typestr, e.g. ``<f4``), ``compressor`` (numcodecs
-  config or null), ``fill_value``, ``filters``, ``order``, and
-  ``zarr_format: 2``;
-- chunk objects named by dot-separated grid coords (``"3.0"``): the
-  C-order binary block of one FULL chunk (edge chunks padded to chunk
-  shape with ``fill_value``), run through the compressor;
-- group directory with ``.zgroup`` (``{"zarr_format": 2}``).
-
-Spark-first mapping (same shape as ``chunkstore.py``):
-
-- **write**: ``groupBy(chunk row)⟶applyInPandas`` — the groupBy exchange
-  IS the chunk-aligned repartition; each task scatters its rows into a
-  padded chunk block and writes one object per array.  No driver
-  collection (the driver writes only the small JSON metadata).
-- **read**: driver parses ``.zarray`` (one small JSON; on a cluster this
-  is one storage GET), then ``spark.read.format("binaryFile")`` lists the
-  chunk objects across tasks and ``mapInPandas`` decompresses + decodes
-  each block columnar-side, trimming edge padding via the array shape.
+- per-array ``.zarray`` JSON: ``shape``, ``chunks``, ``dtype`` (numpy
+  typestr, e.g. ``<f4`` — the endianness lives in the dtype),
+  ``compressor`` (numcodecs config or null), ``fill_value``, ``filters``,
+  ``order`` and ``zarr_format: 2``; groups carry ``.zgroup`` and user
+  attributes a separate ``.zattrs``;
+- chunk objects named by dot-separated grid coords (``"3.0"``), each the
+  C-order binary block of one FULL chunk (edge chunks padded to the chunk
+  shape with ``fill_value``) run through the one compressor;
+- consolidated metadata is zarr-python's ``.zmetadata`` document
+  (``{"metadata": {".zgroup": ..., "X/.zarray": ...},
+  "zarr_consolidated_format": 1}``);
+- strings store as fixed-width ``|S<n>`` bytes (no filter codec needed).
 
 Codecs: ``null`` (raw), ``zlib``, ``gzip`` (stdlib), and ``blosc`` — the
 zarr-python DEFAULT — via the pure-Python container codec in
-``blosc_py.py`` (r6 verdict "missing #1"): lz4/zlib cnames and byte
-shuffle decode without the native library; zstd/snappy/blosclz/bitshuffle
-still raise a clear error naming the codec.  Positional semantics: Zarr
-addresses by row index, so a faithful matrix roundtrip expects dense
-0..n-1 ids (true for the ``embeddings`` table and the reference's AnnData
-matrices, whose obs axis is positional).
+``blosc_py.py``: lz4/zlib cnames and byte shuffle decode without the
+native library; zstd/snappy/blosclz/bitshuffle still raise a clear error
+naming the codec.
 """
 
 from __future__ import annotations
 
 import gzip
-import hashlib
 import json
 import os
 import re
-import shutil
 import zlib
-from collections.abc import Iterator
+from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from ..catalog import load_table
 from ..registry import query
+from .zarr import (
+    COO_ORACLE,
+    OBSM_ORACLE,
+    ZarrFormat,
+    append_zarr_rows,
+    consolidate_metadata,
+    obsm_projection,
+    read_group_coo,
+    read_zarr_matrix_consolidated,
+    read_zarr_vector_consolidated,
+    scratch_store,
+    write_zarr_group,
+    zarr_matrix_coo,
+)
 
-ROWS_PER_CHUNK = 64
+#: zarr-python's v2 consolidated-metadata container version.
+ZARR_CONSOLIDATED_FORMAT = 1
+
+DEFAULT_COMPRESSOR = {"id": "zlib", "level": 1}
+
+_CHUNK_NAME = re.compile(r"^\d+(\.\d+)*$")
 
 
 def _compress(block: bytes, compressor: dict | None, typesize: int = 1) -> bytes:
@@ -114,419 +109,121 @@ def _decompress(blob: bytes, compressor: dict | None) -> bytes:
     )
 
 
-def _write_zarray_meta(
-    path: str,
-    shape: list[int],
-    chunks: list[int],
-    dtype: str,
-    compressor: dict | None,
-    fill_value,
-) -> None:
-    os.makedirs(path, exist_ok=True)
-    meta = {
-        "zarr_format": 2,
-        "shape": shape,
-        "chunks": chunks,
-        "dtype": dtype,
-        "compressor": compressor,
-        "fill_value": fill_value,
-        "filters": None,
-        "order": "C",
-    }
-    with open(os.path.join(path, ".zarray"), "w") as f:
-        json.dump(meta, f)
+@dataclass(frozen=True)
+class V2(ZarrFormat):
+    """Zarr v2; ``compressor`` is the numcodecs config new arrays are
+    written with (``None``: raw chunks)."""
 
+    compressor: dict | None = field(default_factory=lambda: dict(DEFAULT_COMPRESSOR))
 
-_DEFAULT_COMPRESSOR = {"id": "zlib", "level": 1}
+    VERSION = 2
+    NODE_FILES = (".zarray", ".zgroup", ".zattrs")
+    ARRAY_META = ".zarray"
 
+    def validate_meta(self, doc: dict, where: str) -> dict:
+        if doc.get("zarr_format") != 2:
+            raise ValueError(f"not a zarr v2 array: {where}")
+        if doc.get("filters"):
+            raise NotImplementedError("zarr filters are not supported")
+        return doc
 
-def write_zarr_group(
-    wide: DataFrame,
-    path: str,
-    rows_per_chunk: int = ROWS_PER_CHUNK,
-    compressor: dict | None = _DEFAULT_COMPRESSOR,
-    cols_per_chunk: int | None = None,
-    obs_cols: tuple[str, ...] = (),
-    skip_x: bool = False,
-) -> dict:
-    """Write (vec_id, embedding) rows as a Zarr v2 group at ``path``:
-    ``X`` (2-D float32, chunks ``[rows_per_chunk, cols_per_chunk or dim]``)
-    + ``vec_id`` (1-D int64, chunks ``[rows_per_chunk]``) + one 1-D array
-    per ``obs_cols`` entry (``obs_<name>``; int64 for integer columns,
-    float64 otherwise — the AnnData per-cell annotation arrays).
+    def document(self, shape, chunks, dtype: np.dtype, fill) -> dict:
+        return {
+            "zarr_format": 2,
+            "shape": shape,
+            "chunks": chunks,
+            "dtype": dtype.str,
+            "compressor": self.compressor,
+            "fill_value": fill,
+            "filters": None,
+            "order": "C",
+        }
 
-    Chunk grid position is ``vec_id div rows_per_chunk`` (positional
-    semantics — see module docstring); each ``applyInPandas`` task
-    scatters its rows into a padded block and writes every array's chunk
-    objects — with ``cols_per_chunk`` set, one object per (row, col) grid
-    cell (``"{r}.{c}"``), edge chunks padded on BOTH axes per the spec.
-    Returns the group metadata (shape, chunks, n_chunks).
+    def write_group_meta(self, path: str) -> None:
+        with open(os.path.join(path, ".zgroup"), "w") as f:
+            json.dump({"zarr_format": 2}, f)
 
-    NULL handling (r14 advice): string obs values coerce NULL → ``""``
-    on write — fixed-width ``|S<n>`` has no NULL sentinel (NumPy strips
-    trailing padding on read, so ``""`` and NULL are indistinguishable
-    after a round-trip).  If NULL fidelity matters, pre-encode a
-    sentinel value (the v3 dict path reserves code -1 for exactly this).
+    def column_dtype(self, spark_type: str, width: int) -> tuple[np.dtype, object]:
+        # strings: fixed-width |S<n> bytes — the NumPy/Zarr-v2 spec dtype
+        # WITHOUT filters (the VLenUTF8 object-dtype route needs a filter
+        # codec this reader refuses); NULL has no sentinel, so no fill
+        if spark_type == "string":
+            return np.dtype(f"S{width}"), None
+        return super().column_dtype(spark_type, width)
 
-    ``skip_x=True`` writes everything EXCEPT the dense ``X`` array — the
-    sparse-store path: ``AnnFrame.to_zarr(sparse=True)`` writes vec_id +
-    obs here and the ``csr_matrix`` subgroup via ``sparse.write_zarr_csr``.
-    """
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path, exist_ok=True)
+    def chunk_key(self, meta: dict, coords: tuple[int, ...]) -> str:
+        return ".".join(str(c) for c in coords)
 
-    bounds = wide.agg(
-        F.max("vec_id").alias("mx"),
-        F.count(F.lit(1)).alias("n"),
-        F.max(F.size("embedding")).alias("dim"),
-    ).collect()[0]
-    n_rows, dim = int(bounds["mx"]) + 1, int(bounds["dim"])
-    if int(bounds["n"]) != n_rows:
-        raise ValueError(
-            f"zarr positional write needs dense 0..n-1 ids: max+1={n_rows}, rows={bounds['n']}"
+    def chunk_coords(self, meta: dict, array_path: str, file_path: str) -> tuple[int, ...]:
+        name = os.path.basename(file_path)
+        if not _CHUNK_NAME.match(name):
+            raise ValueError(f"not a zarr chunk object: {file_path}")
+        return tuple(int(p) for p in name.split("."))
+
+    def chunk_files(self, spark: SparkSession, array_path: str) -> DataFrame:
+        return (
+            spark.read.format("binaryFile")
+            .option("pathGlobFilter", "[0-9]*")
+            .load(array_path)
+            .select("path", "content")
         )
-    cpc = cols_per_chunk or dim
-    n_col_chunks = (dim + cpc - 1) // cpc
 
-    x_path, id_path = os.path.join(path, "X"), os.path.join(path, "vec_id")
-    if not skip_x:
-        _write_zarray_meta(
-            x_path, [n_rows, dim], [rows_per_chunk, cpc], "<f4", compressor, 0.0
+    def encode_chunk(self, meta: dict, block: np.ndarray, valid_rows: int | None) -> bytes:
+        raw = np.ascontiguousarray(block).tobytes(order="C")
+        return _compress(raw, meta.get("compressor"), block.dtype.itemsize)
+
+    def decode_chunk(self, meta: dict, blob: bytes) -> np.ndarray:
+        raw = _decompress(blob, meta.get("compressor"))
+        return np.frombuffer(raw, dtype=meta["dtype"]).reshape(
+            meta["chunks"], order=meta.get("order", "C")
         )
-    _write_zarray_meta(id_path, [n_rows], [rows_per_chunk], "<i8", compressor, 0)
-    dtypes = dict(wide.dtypes)
-    # String/categorical obs columns (r13 verdict #4): fixed-width |S<n>
-    # bytes — the NumPy/Zarr-v2 spec dtype for strings WITHOUT filters
-    # (the VLenUTF8 object-dtype route needs a filter codec this reader
-    # loudly refuses).  Width = max UTF-8 byte length over the column,
-    # measured in one tiny extra aggregate before the write.
-    str_cols = [c for c in obs_cols if dtypes.get(c) == "string"]
-    str_width: dict[str, int] = {}
-    if str_cols:
-        widths = wide.agg(
-            *[F.max(F.octet_length(c)).alias(c) for c in str_cols]
-        ).collect()[0]
-        str_width = {c: max(int(widths[c] or 1), 1) for c in str_cols}
-    obs_meta: dict[str, tuple[str, np.dtype]] = {}
-    for col in obs_cols:
-        t = dtypes.get(col)
-        if t == "string":
-            w = str_width[col]
-            zdt, npdt, fill = f"|S{w}", np.dtype(f"S{w}"), None
-        elif t in ("bigint", "int", "smallint", "tinyint", "long"):
-            zdt, npdt, fill = "<i8", np.dtype("<i8"), 0
-        else:
-            zdt, npdt, fill = "<f8", np.dtype("<f8"), 0
-        apath = os.path.join(path, f"obs_{col}")
-        _write_zarray_meta(apath, [n_rows], [rows_per_chunk], zdt, compressor, fill)
-        obs_meta[col] = (apath, npdt)
-    with open(os.path.join(path, ".zgroup"), "w") as f:
-        json.dump({"zarr_format": 2}, f)
 
-    result_schema = StructType(
-        [StructField("chunk_id", LongType()), StructField("n_rows", LongType())]
-    )
+    def write_group_attrs(self, group_path: str, attrs: dict) -> None:
+        """Write (replace) the group's ``.zattrs`` document."""
+        with open(os.path.join(group_path, ".zattrs"), "w") as f:
+            json.dump(attrs, f, sort_keys=True)
 
-    def _write_chunk(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        (chunk_id,) = key
-        offs = pdf["vec_id"].to_numpy(dtype=np.int64) - chunk_id * rows_per_chunk
-        id_block = np.zeros(rows_per_chunk, dtype=np.dtype("<i8"))
-        id_block[offs] = pdf["vec_id"].to_numpy(dtype=np.int64)
-        if not skip_x:
-            x_block = np.zeros((rows_per_chunk, dim), dtype=np.dtype("<f4"))
-            x_block[offs] = np.array(pdf["embedding"].to_list(), dtype=np.float32)
-            for c in range(n_col_chunks):
-                sub = x_block[:, c * cpc : (c + 1) * cpc]
-                if sub.shape[1] < cpc:  # right-edge chunk: pad to chunk shape
-                    pad = np.zeros((rows_per_chunk, cpc), dtype=np.dtype("<f4"))
-                    pad[:, : sub.shape[1]] = sub
-                    sub = pad
-                with open(os.path.join(x_path, f"{chunk_id}.{c}"), "wb") as f:
-                    f.write(
-                        _compress(np.ascontiguousarray(sub).tobytes(order="C"), compressor, 4)
-                    )
-        with open(os.path.join(id_path, f"{chunk_id}"), "wb") as f:
-            f.write(_compress(id_block.tobytes(order="C"), compressor, 8))
-        for col, (apath, npdt) in obs_meta.items():
-            block = np.zeros(rows_per_chunk, dtype=npdt)
-            if npdt.kind == "S":
-                block[offs] = np.array(
-                    [(s or "").encode("utf-8") for s in pdf[col]], dtype=npdt
-                )
-            else:
-                block[offs] = pdf[col].to_numpy(dtype=npdt)
-            with open(os.path.join(apath, f"{chunk_id}"), "wb") as f:
-                f.write(_compress(block.tobytes(order="C"), compressor, npdt.itemsize))
-        return pd.DataFrame({"chunk_id": [chunk_id], "n_rows": [len(pdf)]})
+    def read_group_attrs(self, group_path: str) -> dict:
+        try:
+            with open(os.path.join(group_path, ".zattrs")) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return {}
 
-    n_chunks = (
-        wide.select("vec_id", "embedding", *obs_cols)
-        .withColumn("chunk_id", F.expr(f"vec_id div {rows_per_chunk}"))
-        .groupBy("chunk_id")
-        .applyInPandas(_write_chunk, schema=result_schema)
-        .count()
-    )
-    return {
-        "shape": [n_rows, dim],
-        "chunks": [rows_per_chunk, cpc],
-        "n_chunks": int(n_chunks) * n_col_chunks,
-    }
+    def read_consolidated(self, group_path: str) -> dict:
+        """Parse ``.zmetadata``.  Raises ``FileNotFoundError`` when the
+        store is not consolidated and ``ValueError`` on a container version
+        we did not implement against (decoding anyway could silently
+        misread a future layout)."""
+        with open(os.path.join(group_path, ".zmetadata")) as fh:
+            doc = json.load(fh)
+        fmt = doc.get("zarr_consolidated_format")
+        if fmt != ZARR_CONSOLIDATED_FORMAT:
+            raise ValueError(
+                f"unsupported zarr_consolidated_format {fmt!r} at {group_path}"
+                f" (implemented: {ZARR_CONSOLIDATED_FORMAT})"
+            )
+        md = doc.get("metadata")
+        if not isinstance(md, dict):
+            raise ValueError(f"malformed .zmetadata at {group_path}: no metadata map")
+        return md
+
+    def consolidated_key(self, rel_dir: str, fname: str) -> str | None:
+        if fname not in (".zgroup", ".zarray", ".zattrs"):
+            return None
+        return fname if rel_dir == "." else f"{rel_dir}/{fname}"
+
+    def consolidated_document(self, group_path: str, metadata: dict) -> tuple[str, dict]:
+        return ".zmetadata", {
+            "metadata": metadata,
+            "zarr_consolidated_format": ZARR_CONSOLIDATED_FORMAT,
+        }
 
 
-def write_zarr_obsm_member(
-    values: DataFrame,
-    apath: str,
-    n_rows: int,
-    rows_per_chunk: int = ROWS_PER_CHUNK,
-    compressor: dict | None = _DEFAULT_COMPRESSOR,
-) -> dict:
-    """Write one AnnData ``obsm`` member — a computed per-cell matrix
-    ``(row_id, values array<double>)`` with dense 0..n_rows-1 ids — as a
-    2-D float64 Zarr v2 array at ``apath`` (r14 verdict #1: persist
-    computed embeddings like ``obsm['X_pca']``/``obsm['X_umap']``).
-
-    float64 on purpose: obsm members are DERIVED doubles (PCA scores,
-    layouts) — storing them at compute precision makes the
-    write→read→re-use cycle bit-exact, unlike X's float32 raw counts.
-    Same distributed shape as ``write_zarr_group``: the groupBy(chunk)
-    exchange IS the chunk-aligned repartition, the driver writes only
-    the small ``.zarray`` JSON."""
-    bounds = values.agg(
-        F.count(F.lit(1)).alias("n"), F.max(F.size("values")).alias("dim")
-    ).collect()[0]
-    if int(bounds["n"]) != n_rows:
-        raise ValueError(
-            f"obsm member must carry one row per cell: expected {n_rows},"
-            f" got {bounds['n']} (left-join to the obs index and fill first)"
-        )
-    dim = int(bounds["dim"])
-    _write_zarray_meta(
-        apath, [n_rows, dim], [rows_per_chunk, dim], "<f8", compressor, 0.0
-    )
-    result_schema = StructType([StructField("chunk_id", LongType())])
-
-    def _write_chunk(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        (chunk_id,) = key
-        offs = pdf["row_id"].to_numpy(dtype=np.int64) - chunk_id * rows_per_chunk
-        block = np.zeros((rows_per_chunk, dim), dtype=np.dtype("<f8"))
-        block[offs] = np.array(pdf["values"].to_list(), dtype=np.float64)
-        with open(os.path.join(apath, f"{chunk_id}.0"), "wb") as f:
-            f.write(_compress(block.tobytes(order="C"), compressor, 8))
-        return pd.DataFrame({"chunk_id": [chunk_id]})
-
-    n_chunks = (
-        values.select("row_id", "values")
-        .withColumn("chunk_id", F.expr(f"row_id div {rows_per_chunk}"))
-        .groupBy("chunk_id")
-        .applyInPandas(_write_chunk, schema=result_schema)
-        .count()
-    )
-    return {"shape": [n_rows, dim], "chunks": [rows_per_chunk, dim], "n_chunks": int(n_chunks)}
+# --- registered v2 roundtrips ------------------------------------------------------
 
 
-def write_group_attrs(group_path: str, attrs: dict) -> None:
-    """Write the group's ``.zattrs`` document (v2 user attributes) — the
-    AnnData ``uns`` carrier.  Driver-side: O(bytes of uns), like every
-    other metadata document."""
-    with open(os.path.join(group_path, ".zattrs"), "w") as f:
-        json.dump(attrs, f, sort_keys=True)
-
-
-def read_group_attrs(group_path: str) -> dict:
-    """Read the group's ``.zattrs`` (``{}`` when absent — attrs are
-    optional in the spec)."""
-    try:
-        with open(os.path.join(group_path, ".zattrs")) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return {}
-
-
-def read_zarray_meta(array_path: str) -> dict:
-    with open(os.path.join(array_path, ".zarray")) as f:
-        meta = json.load(f)
-    return _validate_v2_meta(meta, array_path)
-
-
-def _validate_v2_meta(meta: dict, where: str) -> dict:
-    """The v2 array-metadata guards, shared by the per-array ``.zarray``
-    path and the consolidated ``.zmetadata`` path (same dict, same
-    refusals — a store must not decode differently depending on which
-    metadata source served it)."""
-    if meta.get("zarr_format") != 2:
-        raise ValueError(f"not a zarr v2 array: {where}")
-    if meta.get("filters"):
-        raise NotImplementedError("zarr filters are not supported")
-    return meta
-
-
-_CHUNK_NAME = re.compile(r"^\d+(\.\d+)*$")
-
-
-def _chunk_coords(file_path: str) -> tuple[int, ...]:
-    name = os.path.basename(file_path)
-    if not _CHUNK_NAME.match(name):
-        raise ValueError(f"not a zarr chunk object: {file_path}")
-    return tuple(int(p) for p in name.split("."))
-
-
-def _decode_blocks(meta: dict):
-    """mapInPandas decode closure over the (driver-parsed) array metadata.
-
-    Yields (row, <trimmed block rows>) for each chunk object: decompress →
-    ``np.frombuffer`` with the spec dtype → reshape to the chunk shape in
-    the spec order → trim edge padding via the array shape.
-    """
-    shape, chunks = meta["shape"], meta["chunks"]
-    dtype = np.dtype(meta["dtype"])
-    order = meta.get("order", "C")
-    compressor = meta.get("compressor")
-    two_d = len(shape) == 2
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                coords = _chunk_coords(fpath)
-                block = np.frombuffer(
-                    _decompress(bytes(content), compressor), dtype=dtype
-                ).reshape(chunks, order=order)
-                row0 = coords[0] * chunks[0]
-                valid = min(chunks[0], shape[0] - row0)
-                rows = np.arange(row0, row0 + valid, dtype=np.int64)
-                if two_d:
-                    col0 = coords[1] * chunks[1]
-                    vcols = min(chunks[1], shape[1] - col0)
-                    vals = block[:valid, :vcols].astype(np.float64)
-                    yield pd.DataFrame(
-                        {
-                            "row": rows,
-                            "col0": np.full(valid, col0, dtype=np.int64),
-                            "values": list(vals),
-                        }
-                    )
-                else:
-                    vals = block[:valid]
-                    if dtype.kind in "iu":
-                        yield pd.DataFrame(
-                            {"row": rows, "value": vals.astype(np.int64)}
-                        )
-                    elif dtype.kind == "S":
-                        # fixed-width bytes: numpy strips the trailing
-                        # null padding on item access; decode UTF-8
-                        yield pd.DataFrame(
-                            {"row": rows, "value": [b.decode("utf-8") for b in vals]}
-                        )
-                    else:
-                        yield pd.DataFrame(
-                            {"row": rows, "value": vals.astype(np.float64)}
-                        )
-
-    return _decode
-
-
-def read_zarr_matrix(spark: SparkSession, array_path: str) -> DataFrame:
-    """2-D Zarr v2 array -> (row, col0, values: array<double>) slice rows.
-
-    One driver-side ``.zarray`` GET; chunk objects are listed and decoded
-    executor-side (``binaryFile`` splits the listing across tasks).  Each
-    output row is one chunk's slice of one matrix row starting at global
-    column ``col0`` (always 0 for row-chunked layouts — exactly one slice
-    per row, no regroup needed).  For a column-chunked grid, callers
-    reassemble with a group on ``row`` ordering slices by ``col0``, or —
-    for COO consumers — offset positions by ``col0`` directly (see
-    ``zarr_matrix_coo``; the registered ``zarr_colchunk_roundtrip`` query
-    hash-checks this path end to end).
-    """
-    return _plan_matrix_read(spark, array_path, read_zarray_meta(array_path))
-
-
-def _plan_matrix_read(spark: SparkSession, array_path: str, meta: dict) -> DataFrame:
-    if len(meta["shape"]) != 2:
-        raise ValueError(f"read_zarr_matrix expects a 2-D array, got {meta['shape']}")
-    schema = StructType(
-        [
-            StructField("row", LongType()),
-            StructField("col0", LongType()),
-            StructField("values", ArrayType(DoubleType())),
-        ]
-    )
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "[0-9]*")
-        .load(array_path)
-    )
-    return files.select("path", "content").mapInPandas(_decode_blocks(meta), schema=schema)
-
-
-def read_zarr_vector(spark: SparkSession, array_path: str) -> DataFrame:
-    """1-D Zarr v2 array -> (row: bigint, value: bigint|double) rows."""
-    return _plan_vector_read(spark, array_path, read_zarray_meta(array_path))
-
-
-def _plan_vector_read(spark: SparkSession, array_path: str, meta: dict) -> DataFrame:
-    if len(meta["shape"]) != 1:
-        raise ValueError(f"read_zarr_vector expects a 1-D array, got {meta['shape']}")
-    kind = np.dtype(meta["dtype"]).kind
-    vtype = (
-        LongType()
-        if kind in "iu"
-        else StringType() if kind == "S" else DoubleType()
-    )
-    schema = StructType([StructField("row", LongType()), StructField("value", vtype)])
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "[0-9]*")
-        .load(array_path)
-    )
-    return files.select("path", "content").mapInPandas(_decode_blocks(meta), schema=schema)
-
-
-_ZARR_ROUNDTRIP_ORACLE = """
-SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-       round(CAST(unnest(embedding) AS DOUBLE), 6) AS v
-FROM embeddings
-"""
-
-
-def zarr_matrix_coo(x: DataFrame, ids: DataFrame) -> DataFrame:
-    """(row, col0, values) slices + (row, vec_id) index -> COO
-    (vec_id, pos, v) with 1-based global positions — layout-agnostic:
-    row-chunked arrays contribute one slice per row (col0=0), column-
-    chunked grids one slice per (row, col chunk), offset by ``col0``."""
-    return (
-        x.join(ids, "row")
-        .select("vec_id", "col0", F.posexplode("values").alias("pos0", "vd"))
-        .select(
-            "vec_id",
-            (F.col("col0") + F.col("pos0") + 1).alias("pos"),
-            F.round(F.col("vd"), 6).alias("v"),
-        )
-    )
-
-
-def _zarr_roundtrip_coo(
-    spark: SparkSession,
-    sf_dir: str,
-    tag: str,
-    compressor: dict | None,
-    cols_per_chunk: int | None = None,
-) -> DataFrame:
-    import tempfile
-
-    e = load_table(spark, sf_dir, "embeddings")
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"sce_zarr_{tag}_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
-    )
-    write_zarr_group(e, store, compressor=compressor, cols_per_chunk=cols_per_chunk)
-    x = read_zarr_matrix(spark, os.path.join(store, "X"))
-    ids = read_zarr_vector(spark, os.path.join(store, "vec_id")).withColumnRenamed(
-        "value", "vec_id"
-    )
-    return zarr_matrix_coo(x, ids)
-
-
-@query("zarr_roundtrip", oracle=_ZARR_ROUNDTRIP_ORACLE, tags=("sources", "zarr"), cache=False)
+@query("zarr_roundtrip", oracle=COO_ORACLE, tags=("sources", "zarr"), cache=False)
 def zarr_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1+A2 end-to-end on the REAL format: embeddings → Zarr v2 group
     write (zlib chunks, padded edge chunk) → parallel chunk read of both
@@ -534,167 +231,36 @@ def zarr_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     COO oracle proves the store reproduces the matrix bit-for-bit (float32
     values round-tripped exactly, rounded to 6 only for the oracle's
     double formatting)."""
-    return _zarr_roundtrip_coo(spark, sf_dir, "row", _DEFAULT_COMPRESSOR)
+    store = scratch_store("sce_zarr_row", sf_dir)
+    write_zarr_group(load_table(spark, sf_dir, "embeddings"), store, V2())
+    return read_group_coo(spark, store)
 
 
 @query(
     "zarr_colchunk_roundtrip",
-    oracle=_ZARR_ROUNDTRIP_ORACLE,
+    oracle=COO_ORACLE,
     tags=("sources", "zarr", "blosc"),
     cache=False,
 )
 def zarr_colchunk_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The two r6-verdict gaps in one hash-checked path: a **2-D chunk
-    grid** (``[64, ceil(dim/2)]`` — every matrix row spans two chunk
-    objects, exercising ``read_zarr_matrix``'s col0/regroup branch and the
-    right-edge column padding) written with the **blosc** compressor
+    """A **2-D chunk grid** (``[64, ceil(dim/2)]`` — every matrix row spans
+    two chunk objects, exercising ``read_zarr_matrix``'s col0 branch and
+    the right-edge column padding) written with the **blosc** compressor
     (zarr-python's default codec family; pure-Python container codec in
     ``blosc_py`` — zlib cname, byte shuffle).  Identical COO oracle to
     ``zarr_roundtrip``: hash equality proves both the column arithmetic
     and the blosc encode/decode are bit-exact."""
-    e_dim = load_table(spark, sf_dir, "embeddings").agg(
-        F.max(F.size("embedding"))
-    ).collect()[0][0]
+    e = load_table(spark, sf_dir, "embeddings")
+    e_dim = int(e.agg(F.max(F.size("embedding"))).collect()[0][0])
     blosc = {"id": "blosc", "cname": "zlib", "clevel": 3, "shuffle": 1, "blocksize": 0}
-    return _zarr_roundtrip_coo(
-        spark, sf_dir, "col", blosc, cols_per_chunk=(int(e_dim) + 1) // 2
-    )
-
-
-# --- consolidated metadata (.zmetadata) ----------------------------------------
-
-#: zarr-python's v2 consolidated-metadata container version.
-ZARR_CONSOLIDATED_FORMAT = 1
-
-_META_NAMES = (".zgroup", ".zarray", ".zattrs")
-
-
-def consolidate_metadata(group_path: str) -> dict:
-    """Write zarr-python-compatible consolidated metadata for the group:
-    one ``.zmetadata`` JSON at the root holding every member ``.zgroup`` /
-    ``.zarray`` / ``.zattrs`` document under slash-separated relative keys
-    (``{"metadata": {".zgroup": ..., "X/.zarray": ...},
-    "zarr_consolidated_format": 1}`` — the exact shape
-    ``zarr.consolidate_metadata`` produces, so stores we consolidate open
-    in zarr-python and vice versa).
-
-    This is the object-store survival trait: opening an UNconsolidated
-    group costs one GET per member metadata key (O(arrays) round-trips —
-    real AnnData groups carry hundreds of obs/var arrays), while a
-    consolidated store opens with ONE metadata GET regardless of member
-    count.  Written atomically (tmp + rename) so a concurrent reader never
-    sees a half-consolidated document.
-    """
-    meta: dict[str, dict] = {}
-    for root, dirs, files in os.walk(group_path):
-        # Prune non-node subtrees in place: only directories that are
-        # themselves zarr group/array nodes can hold metadata documents.
-        # Without this the walk visits every "/"-separated chunk directory
-        # — O(total chunk objects) local I/O for a metadata-only pass.
-        dirs[:] = [
-            d
-            for d in dirs
-            if os.path.exists(os.path.join(root, d, ".zgroup"))
-            or os.path.exists(os.path.join(root, d, ".zarray"))
-        ]
-        for fname in files:
-            if fname not in _META_NAMES:
-                continue
-            rel = os.path.relpath(os.path.join(root, fname), group_path).replace(
-                os.sep, "/"
-            )
-            with open(os.path.join(root, fname)) as fh:
-                meta[rel] = json.load(fh)
-    doc = {
-        "metadata": {k: meta[k] for k in sorted(meta)},
-        "zarr_consolidated_format": ZARR_CONSOLIDATED_FORMAT,
-    }
-    # mkstemp (not a fixed tmp name): two concurrent consolidations of the
-    # same store must each rename a COMPLETE document into place — a shared
-    # tmp path would let their writes interleave before the rename.
-    import tempfile as _tempfile
-
-    fd, tmp = _tempfile.mkstemp(dir=group_path, prefix=".zmetadata.tmp.")
-    with os.fdopen(fd, "w") as fh:
-        json.dump(doc, fh, indent=1, sort_keys=True)
-    # mkstemp creates 0600; the rename would carry that over, leaving the
-    # one consolidated document more restrictive than every other store
-    # file written via plain open().  Re-grant to the umask default so
-    # other-uid readers of a shared store see consistent permissions.
-    _chmod_umask_default(tmp)
-    os.replace(tmp, os.path.join(group_path, ".zmetadata"))
-    return doc
-
-
-def _read_umask() -> int:
-    """Read the process umask once at import, while the interpreter is
-    still single-threaded: the only portable read is the set-and-restore
-    idiom, and running it later would race concurrent file creation in
-    other threads (files born with umask 0 inside the window)."""
-    um = os.umask(0)
-    os.umask(um)
-    return um
-
-
-_UMASK = _read_umask()
-
-
-def _chmod_umask_default(path: str) -> None:
-    """chmod ``path`` to 0666 masked by the process umask — the mode a
-    plain ``open(..., "w")`` would have produced."""
-    os.chmod(path, 0o666 & ~_UMASK)
-
-
-def read_consolidated_meta(group_path: str) -> dict:
-    """Parse the group's ``.zmetadata`` -> {relative key: metadata dict}.
-
-    Raises ``FileNotFoundError`` when the store is not consolidated and
-    ``ValueError`` on a container version we did not implement against
-    (decoding anyway could silently misread a future layout).
-    """
-    with open(os.path.join(group_path, ".zmetadata")) as fh:
-        doc = json.load(fh)
-    fmt = doc.get("zarr_consolidated_format")
-    if fmt != ZARR_CONSOLIDATED_FORMAT:
-        raise ValueError(
-            f"unsupported zarr_consolidated_format {fmt!r} at {group_path}"
-            f" (implemented: {ZARR_CONSOLIDATED_FORMAT})"
-        )
-    md = doc.get("metadata")
-    if not isinstance(md, dict):
-        raise ValueError(f"malformed .zmetadata at {group_path}: no metadata map")
-    return md
-
-
-def _consolidated_array_meta(group_path: str, array: str) -> dict:
-    md = read_consolidated_meta(group_path)
-    key = f"{array}/.zarray"
-    if key not in md:
-        raise KeyError(f"array {array!r} not in consolidated metadata ({group_path})")
-    return _validate_v2_meta(md[key], f"{group_path}:{key}")
-
-
-def read_zarr_matrix_consolidated(
-    spark: SparkSession, group_path: str, array: str = "X"
-) -> DataFrame:
-    """``read_zarr_matrix`` planned from the group's ``.zmetadata`` —
-    zero per-array metadata reads (the member ``.zarray`` is never
-    opened); chunk objects are still listed and decoded executor-side."""
-    meta = _consolidated_array_meta(group_path, array)
-    return _plan_matrix_read(spark, os.path.join(group_path, array), meta)
-
-
-def read_zarr_vector_consolidated(
-    spark: SparkSession, group_path: str, array: str
-) -> DataFrame:
-    """``read_zarr_vector`` planned from the group's ``.zmetadata``."""
-    meta = _consolidated_array_meta(group_path, array)
-    return _plan_vector_read(spark, os.path.join(group_path, array), meta)
+    store = scratch_store("sce_zarr_col", sf_dir)
+    write_zarr_group(e, store, V2(blosc), cols_per_chunk=(e_dim + 1) // 2)
+    return read_group_coo(spark, store)
 
 
 @query(
     "zarr_consolidated_roundtrip",
-    oracle=_ZARR_ROUNDTRIP_ORACLE,
+    oracle=COO_ORACLE,
     tags=("sources", "zarr", "consolidated"),
     cache=False,
 )
@@ -709,20 +275,12 @@ def zarr_consolidated_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests by deleting the sidecars from a consolidated copy and reading it
     anyway).
     """
-    import tempfile
-
-    e = load_table(spark, sf_dir, "embeddings")
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"sce_zarr_consol_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
-    )
-    write_zarr_group(e, store, compressor=_DEFAULT_COMPRESSOR)
+    store = scratch_store("sce_zarr_consol", sf_dir)
+    write_zarr_group(load_table(spark, sf_dir, "embeddings"), store, V2())
     consolidate_metadata(store)
     x = read_zarr_matrix_consolidated(spark, store, "X")
-    ids = read_zarr_vector_consolidated(spark, store, "vec_id").withColumnRenamed(
-        "value", "vec_id"
-    )
-    return zarr_matrix_coo(x, ids)
+    ids = read_zarr_vector_consolidated(spark, store, "vec_id")
+    return zarr_matrix_coo(x, ids.withColumnRenamed("value", "vec_id"))
 
 
 _ZARR_OBS_STRING_ORACLE = """
@@ -752,8 +310,6 @@ def zarr_obs_string_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the StringType plumbing through the consolidated-or-not vector
     reader.
     """
-    import tempfile
-
     from ..api import AnnFrame
 
     e = load_table(spark, sf_dir, "embeddings").select(
@@ -764,10 +320,7 @@ def zarr_obs_string_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.col("label").cast("bigint").alias("lbl"),
     )
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"sce_zarr_obsstr_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
-    )
+    store = scratch_store("sce_zarr_obsstr", sf_dir)
     AnnFrame.from_table(e).to_zarr(store)
     # consolidate so the read-back plans the |S arrays from .zmetadata —
     # the string dtype through the one-GET path, not just the sidecars
@@ -778,23 +331,9 @@ def zarr_obs_string_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ZARR_OBSM_ORACLE = """
-SELECT vec_id, pos, v, 4 AS uns_k
-FROM (
-  SELECT vec_id, 1 AS pos,
-         round(CAST(embedding[1] AS DOUBLE) - CAST(embedding[2] AS DOUBLE), 6) AS v
-  FROM embeddings
-  UNION ALL
-  SELECT vec_id, 2 AS pos,
-         round(CAST(embedding[3] AS DOUBLE) + 2 * CAST(embedding[4] AS DOUBLE), 6) AS v
-  FROM embeddings
-)
-"""
-
-
 @query(
     "zarr_obsm_roundtrip",
-    oracle=_ZARR_OBSM_ORACLE,
+    oracle=OBSM_ORACLE,
     tags=("sources", "zarr", "api", "obsm"),
     cache=False,
 )
@@ -811,33 +350,13 @@ def zarr_obsm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     recovered uns parameter as a hashed column.  Pins the distributed
     obsm chunk write, the float64 read-back, member discovery through
     consolidated metadata, and the attrs JSON round-trip."""
-    import tempfile
-
     from ..api import AnnFrame
 
     e = load_table(spark, sf_dir, "embeddings")
-    proj = e.select(
-        F.col("vec_id").alias("row_id"),
-        F.array(
-            F.round(
-                F.element_at("embedding", 1).cast("double")
-                - F.element_at("embedding", 2).cast("double"),
-                6,
-            ),
-            F.round(
-                F.element_at("embedding", 3).cast("double")
-                + F.lit(2.0) * F.element_at("embedding", 4).cast("double"),
-                6,
-            ),
-        ).alias("values"),
-    )
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"sce_zarr_obsm_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
-    )
+    store = scratch_store("sce_zarr_obsm", sf_dir)
     af = (
         AnnFrame.from_table(e)
-        .with_obsm("X_umap", proj)
+        .with_obsm("X_umap", obsm_projection(e))
         .with_uns("neighbors", {"k": 4, "method": "exact"})
     )
     af.to_zarr(store)
@@ -901,8 +420,6 @@ def zarr_varm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     positions), consolidates, ``from_zarr``, and emits the recovered varm
     COO.  Pins the gene-axis member write, position-keyed reassembly
     (no vec_id spine), and discovery via consolidated metadata."""
-    import tempfile
-
     from ..api import AnnFrame
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -923,10 +440,7 @@ def zarr_varm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("pos", F.array("c1", "c2").alias("values"))
     )
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"sce_zarr_varm_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
-    )
+    store = scratch_store("sce_zarr_varm", sf_dir)
     af = AnnFrame.from_table(e).with_varm("PCs", loadings)
     af.to_zarr(store)
     consolidate_metadata(store)
@@ -977,8 +491,6 @@ def zarr_obsp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     consolidates, ``from_zarr`` (discovery keys on the encoding tag in
     the consolidated document), and emits the recovered COO.  Pins the
     CSR obsp write, the extent-join decode, and the attrs round-trip."""
-    import tempfile
-
     from ..api import AnnFrame
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -1016,10 +528,7 @@ def zarr_obsp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("v"),
         )
     )
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"sce_zarr_obsp_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
-    )
+    store = scratch_store("sce_zarr_obsp", sf_dir)
     af = (
         AnnFrame.from_table(e)
         .with_obsp("distances", edges)
@@ -1065,8 +574,6 @@ def zarr_raw_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw COO joined to its recovered gene names, with the recovered main
     X width as a pinned column.  Pins that subsetting does NOT lose the
     pre-subset matrix — the exact fidelity AnnData's .raw exists for."""
-    import tempfile
-
     from ..api import AnnFrame
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -1087,10 +594,7 @@ def zarr_raw_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     main = AnnFrame(
         full.x.select("row_id", F.slice("values", 1, 8).alias("values"))
     ).with_raw(raw)
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"sce_zarr_raw_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
-    )
+    store = scratch_store("sce_zarr_raw", sf_dir)
     main.to_zarr(store)
     consolidate_metadata(store)
     back = AnnFrame.from_zarr(spark, store)
@@ -1109,114 +613,9 @@ def zarr_raw_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- in-place row append (grow an existing store) ----------------------------
-
-
-def append_zarr_rows(
-    wide: DataFrame,
-    path: str,
-) -> dict:
-    """Grow an existing row-chunked v2 group IN PLACE by appending rows:
-    new chunk objects for the tail, a read-merge-rewrite of the one
-    boundary chunk the old row count leaves partially filled, and a
-    final shape bump in both ``.zarray`` documents (metadata LAST — a
-    reader racing the append sees the old consistent shape, never a
-    torn one).  The batch-ETL twin of the streaming sink's grow-only
-    contract: ingest day N+1 into day N's store without rewriting
-    history — at 100 TB rewriting the store to add rows is the
-    difference between an append job and a full re-shard.
-
-    Appended ``vec_id``s must be exactly ``old_n .. old_n+m-1`` (dense,
-    positional — the group's id semantics); the X layout must be
-    row-chunked (``chunks[1] == dim``), and stores carrying ``obs_*``
-    members are refused loudly (positional overlay for annotation
-    arrays is not implemented — extend or re-write those stores).
-    Returns the new group metadata."""
-    x_path, id_path = os.path.join(path, "X"), os.path.join(path, "vec_id")
-    xm = read_zarray_meta(x_path)
-    im = read_zarray_meta(id_path)
-    n0, dim = (int(v) for v in xm["shape"])
-    rpc, cpc = (int(v) for v in xm["chunks"])
-    if cpc != dim:
-        raise NotImplementedError(
-            f"append supports row-chunked X (chunks[1]={cpc} != dim={dim})"
-        )
-    if int(im["shape"][0]) != n0 or int(im["chunks"][0]) != rpc:
-        raise ValueError("vec_id array disagrees with X about shape/chunking")
-    obs_members = [d for d in os.listdir(path) if d.startswith("obs_")]
-    if obs_members:
-        raise NotImplementedError(
-            f"append to stores with obs members not implemented: {obs_members}"
-        )
-    compressor = xm.get("compressor")
-
-    bounds = wide.agg(
-        F.min("vec_id").alias("mn"),
-        F.max("vec_id").alias("mx"),
-        F.count(F.lit(1)).alias("m"),
-        F.max(F.size("embedding")).alias("dim"),
-    ).collect()[0]
-    m = int(bounds["m"])
-    if m == 0:
-        return {"shape": [n0, dim], "chunks": [rpc, cpc], "appended": 0}
-    if int(bounds["mn"]) != n0 or int(bounds["mx"]) != n0 + m - 1:
-        raise ValueError(
-            f"append needs dense ids {n0}..{n0 + m - 1}, got"
-            f" [{bounds['mn']}, {bounds['mx']}] over {m} rows"
-        )
-    if int(bounds["dim"]) != dim:
-        raise ValueError(f"dim mismatch: store {dim}, append {bounds['dim']}")
-
-    result_schema = StructType(
-        [StructField("chunk_id", LongType()), StructField("n_rows", LongType())]
-    )
-
-    def _write_chunk(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        (chunk_id,) = key
-        x_file = os.path.join(x_path, f"{chunk_id}.0")
-        id_file = os.path.join(id_path, f"{chunk_id}")
-        if os.path.exists(x_file):  # boundary chunk: overlay onto old rows
-            with open(x_file, "rb") as f:
-                x_block = (
-                    np.frombuffer(_decompress(f.read(), compressor), np.dtype("<f4"))
-                    .reshape(rpc, dim)
-                    .copy()
-                )
-            with open(id_file, "rb") as f:
-                id_block = np.frombuffer(
-                    _decompress(f.read(), compressor), np.dtype("<i8")
-                ).copy()
-        else:
-            x_block = np.zeros((rpc, dim), dtype=np.dtype("<f4"))
-            id_block = np.zeros(rpc, dtype=np.dtype("<i8"))
-        offs = pdf["vec_id"].to_numpy(dtype=np.int64) - chunk_id * rpc
-        x_block[offs] = np.array(pdf["embedding"].to_list(), dtype=np.float32)
-        id_block[offs] = pdf["vec_id"].to_numpy(dtype=np.int64)
-        with open(x_file, "wb") as f:
-            f.write(_compress(np.ascontiguousarray(x_block).tobytes(order="C"), compressor, 4))
-        with open(id_file, "wb") as f:
-            f.write(_compress(id_block.tobytes(order="C"), compressor, 8))
-        return pd.DataFrame({"chunk_id": [chunk_id], "n_rows": [len(pdf)]})
-
-    (
-        wide.select("vec_id", "embedding")
-        .withColumn("chunk_id", F.expr(f"vec_id div {rpc}"))
-        .groupBy("chunk_id")
-        .applyInPandas(_write_chunk, schema=result_schema)
-        .count()
-    )
-    n1 = n0 + m
-    for apath, meta, shape in ((x_path, xm, [n1, dim]), (id_path, im, [n1])):
-        meta = dict(meta)
-        meta["shape"] = shape
-        with open(os.path.join(apath, ".zarray"), "w") as f:
-            json.dump(meta, f, sort_keys=True)
-    return {"shape": [n1, dim], "chunks": [rpc, cpc], "appended": m}
-
-
 @query(
     "zarr_append_roundtrip",
-    oracle=_ZARR_ROUNDTRIP_ORACLE,
+    oracle=COO_ORACLE,
     tags=("sources", "zarr", "append"),
     cache=False,
 )
@@ -1229,19 +628,9 @@ def zarr_append_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``zarr_roundtrip`` — proving append ≡ whole-write byte-for-byte at
     the COO level.  Only ceil(m/chunk)+1 objects are touched; history
     chunks are never rewritten."""
-    import tempfile
-
     e = load_table(spark, sf_dir, "embeddings")
-    n = e.count()
-    half = n // 2
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"sce_zarr_append_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
-    )
-    write_zarr_group(e.where(F.col("vec_id") < half), store)
+    half = e.count() // 2
+    store = scratch_store("sce_zarr_append", sf_dir)
+    write_zarr_group(e.where(F.col("vec_id") < half), store, V2())
     append_zarr_rows(e.where(F.col("vec_id") >= half), store)
-    x = read_zarr_matrix(spark, os.path.join(store, "X"))
-    ids = read_zarr_vector(spark, os.path.join(store, "vec_id")).withColumnRenamed(
-        "value", "vec_id"
-    )
-    return zarr_matrix_coo(x, ids)
+    return read_group_coo(spark, store)

@@ -617,7 +617,7 @@ def test_from_zarr_consolidated_is_equivalent_and_exclusive(spark, tmp_path):
 
     import numpy as np
 
-    from single_cell_experiments_spark.sources.zarrv2 import consolidate_metadata
+    from single_cell_experiments_spark.sources.zarr import consolidate_metadata
 
     af = _af(spark)
     path = str(tmp_path / "grp_consol")

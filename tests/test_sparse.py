@@ -81,7 +81,8 @@ def test_csr_bytes_scale_with_nnz_not_shape(spark, tmp_path):
     """The encoding's reason to exist: at ~10% density the CSR store must
     be several times smaller than the dense group of the same matrix."""
     from single_cell_experiments_spark.catalog import load_table
-    from single_cell_experiments_spark.sources.zarrv2 import write_zarr_group
+    from single_cell_experiments_spark.sources.zarr import write_zarr_group
+    from single_cell_experiments_spark.sources.zarrv2 import V2
     from tests.conftest import SF_DIR
 
     e = load_table(spark, SF_DIR, "embeddings")
@@ -97,7 +98,7 @@ def test_csr_bytes_scale_with_nnz_not_shape(spark, tmp_path):
         .where(F.col("v") > 0.25)  # ~2-9% of the bounded embedding values
     )
     dense_store, csr_store = str(tmp_path / "dense"), str(tmp_path / "csr")
-    write_zarr_group(e, dense_store)
+    write_zarr_group(e, dense_store, V2())
     info = write_zarr_csr(coo, csr_store, n, dim)
 
     def du(p):

@@ -1,4 +1,6 @@
-"""Zarr v2 source tests.
+"""Zarr source tests: the v2 format, the format-agnostic layer
+(consolidation, dense-id guards — parametrized over both formats) and the
+``sce_zarr`` DataSource.
 
 The decisive case is the HAND-BUILT store: chunk objects and ``.zarray``
 JSON written here byte-by-byte from the public v2 spec, never touching the
@@ -16,13 +18,24 @@ import zlib
 import numpy as np
 import pytest
 
-from single_cell_experiments_spark.sources.zarrv2 import (
+from single_cell_experiments_spark.sources.zarr import (
+    ROWS_PER_CHUNK,
+    consolidate_metadata,
     read_zarr_matrix,
+    read_zarr_matrix_consolidated,
     read_zarr_vector,
-    read_zarray_meta,
+    read_zarr_vector_consolidated,
     write_zarr_group,
+    write_zarr_obsm_member,
 )
+from single_cell_experiments_spark.sources.zarrv2 import V2
+from single_cell_experiments_spark.sources.zarrv3 import V3
 from tests.conftest import SF_DIR
+
+read_zarray_meta = V2().read_meta
+
+#: one instance per format, for the tests parametrized over both
+FORMATS = [pytest.param(V2(), id="v2"), pytest.param(V3(), id="v3")]
 
 
 def _hand_store(tmp_path):
@@ -199,7 +212,7 @@ def test_blosc_zstd_roundtrip(spark, tmp_path):
     store = str(tmp_path / "zs")
     e = load_table(spark, SF_DIR, "embeddings").limit(200)
     blosc = {"id": "blosc", "cname": "zstd", "clevel": 3, "shuffle": 1}
-    write_zarr_group(e, store, rows_per_chunk=64, compressor=blosc)
+    write_zarr_group(e, store, V2(blosc), rows_per_chunk=64)
     df = read_zarr_matrix(spark, os.path.join(store, "X"))
     assert df.count() == 200
 
@@ -249,7 +262,7 @@ def test_blosc_zarr_store_roundtrip(spark, tmp_path):
     store = str(tmp_path / "bl")
     e = load_table(spark, SF_DIR, "embeddings")
     blosc = {"id": "blosc", "cname": "zlib", "clevel": 3, "shuffle": 1}
-    write_zarr_group(e, store, rows_per_chunk=64, compressor=blosc)
+    write_zarr_group(e, store, V2(blosc), rows_per_chunk=64)
     meta = read_zarray_meta(os.path.join(store, "X"))
     assert meta["compressor"]["id"] == "blosc"
 
@@ -278,7 +291,7 @@ def test_colchunk_grid_reassembles_full_rows(spark, tmp_path):
     )
     wide = spark.createDataFrame(pdf)
     store = str(tmp_path / "cg")
-    info = write_zarr_group(wide, store, rows_per_chunk=2, cols_per_chunk=2)
+    info = write_zarr_group(wide, store, V2(), rows_per_chunk=2, cols_per_chunk=2)
     assert info["chunks"] == [2, 2]
     x = read_zarr_matrix(spark, os.path.join(store, "X")).toPandas()
     assert set(x["col0"]) == {0, 2}
@@ -293,7 +306,7 @@ def test_writer_emits_spec_metadata_and_padded_edge_chunks(spark, tmp_path):
 
     store = str(tmp_path / "grp")
     e = load_table(spark, SF_DIR, "embeddings")
-    info = write_zarr_group(e, store, rows_per_chunk=64)
+    info = write_zarr_group(e, store, V2(), rows_per_chunk=64)
     assert (info["shape"][0] % 64) != 0, "fixture must exercise the padded edge chunk"
 
     meta = read_zarray_meta(os.path.join(store, "X"))
@@ -346,20 +359,13 @@ def _read_store(store):
     """Decode every chunk of a committed store to a dense (n, dim) array."""
     import numpy as np
 
-    from single_cell_experiments_spark.sources.zarrv2 import (
-        read_zarray_meta,
-        _decompress,
-    )
-
     meta = read_zarray_meta(store)
     n, dim = meta["shape"]
     rpc = meta["chunks"][0]
     out = np.zeros((n, dim))
     for cid in range((n + rpc - 1) // rpc):
-        raw = _decompress(
-            open(os.path.join(store, f"{cid}.0"), "rb").read(), meta["compressor"]
-        )
-        block = np.frombuffer(raw, dtype="<f8").reshape(rpc, dim)
+        block = V2().read_chunk(store, meta, (cid, 0))
+        assert block.dtype == np.dtype("<f8") and block.shape == (rpc, dim)
         lo = cid * rpc
         out[lo : min(lo + rpc, n)] = block[: min(rpc, n - lo)]
     return out
@@ -484,7 +490,6 @@ def test_pyds_stream_restart_ingests_only_new_chunks(spark, tmp_path):
     import json as _json
 
     from single_cell_experiments_spark.sources.pyds import ZarrDataSource
-    from single_cell_experiments_spark.sources.zarrv2 import _compress
 
     # hand-built grow-only store: 2 chunks of 2 rows x 3 cols, raw f8
     xdir = tmp_path / "X"
@@ -861,10 +866,6 @@ def test_pyds_stream_writer_grow_only_multibatch(tmp_path):
     values read back exactly, a replayed batchId is a no-op, and the
     grow-only / frozen-boundary / dims validations reject loudly."""
     from single_cell_experiments_spark.sources.pyds import ZarrStreamChunkWriter
-    from single_cell_experiments_spark.sources.zarrv2 import (
-        ROWS_PER_CHUNK,
-        read_zarray_meta,
-    )
 
     path = str(tmp_path / "arr")
     w = ZarrStreamChunkWriter(path, overwrite=False)
@@ -909,11 +910,11 @@ def test_pyds_stream_writer_grow_only_multibatch(tmp_path):
         w.commit([bad3], batchId=3)
 
     # read back: chunk 0 values + frozen padded tail of chunk 1
-    from single_cell_experiments_spark.sources.zarrv2 import _decode_blocks
+    from single_cell_experiments_spark.sources.zarr import decode_blocks
     import pandas as pd
 
     meta = read_zarray_meta(path)
-    decode = _decode_blocks(meta)
+    decode = decode_blocks(V2(), path, meta)
     with open(os.path.join(path, "0.0"), "rb") as fh:
         c0 = fh.read()
     out = next(decode(iter([pd.DataFrame({"path": ["0.0"], "content": [c0]})])))
@@ -941,17 +942,13 @@ def test_pyds_connector_reads_sharded_v3_store(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from single_cell_experiments_spark.sources.pyds import read_zarr_pyds
-    from single_cell_experiments_spark.sources.zarrv3 import (
-        read_zarr_v3_matrix,
-        write_zarr_v3_group,
-    )
 
     e = spark.createDataFrame(
         [(i, [float(i), float(i) + 0.5, 42.0 - i]) for i in range(100)],
         "vec_id long, embedding array<float>",
     )
     store = str(tmp_path / "v3s")
-    write_zarr_v3_group(e, store, shard_inner_rows=16)
+    write_zarr_group(e, store, V3(shard_inner_rows=16))
 
     via_connector = {
         (r.row, r.col0, tuple(r["values"]))
@@ -959,7 +956,7 @@ def test_pyds_connector_reads_sharded_v3_store(spark, tmp_path):
     }
     via_reader = {
         (r.row, r.col0, tuple(r["values"]))
-        for r in read_zarr_v3_matrix(spark, os.path.join(store, "X")).collect()
+        for r in read_zarr_matrix(spark, os.path.join(store, "X")).collect()
     }
     assert via_connector == via_reader and len(via_connector) == 100
 
@@ -969,14 +966,13 @@ def test_pyds_stream_reads_sharded_v3_store(spark, tmp_path):
     the SHARD shape (the outer grid chunk keys address), so each manifest
     index is one shard object under the nested default key encoding."""
     from single_cell_experiments_spark.sources.pyds import ZarrChunkStreamReader
-    from single_cell_experiments_spark.sources.zarrv3 import write_zarr_v3_group
 
     e = spark.createDataFrame(
         [(i, [float(i), 7.0]) for i in range(100)],
         "vec_id long, embedding array<float>",
     )
     store = str(tmp_path / "v3ss")
-    write_zarr_v3_group(e, store, rows_per_chunk=64, shard_inner_rows=16)
+    write_zarr_group(e, store, V3(shard_inner_rows=16), rows_per_chunk=64)
     xdir = os.path.join(store, "X")
 
     r = ZarrChunkStreamReader({"path": xdir})
@@ -1003,11 +999,8 @@ def test_pyds_stream_writer_v3_mode_grow_only(tmp_path):
     import json as _json
 
     from single_cell_experiments_spark.sources.pyds import ZarrStreamChunkWriter
-    from single_cell_experiments_spark.sources.zarrv2 import ROWS_PER_CHUNK
-    from single_cell_experiments_spark.sources.zarrv3 import (
-        _decode_chain,
-        read_zarr_v3_meta,
-    )
+
+    read_zarr_v3_meta = V3().read_meta
 
     path = str(tmp_path / "arr3")
     w = ZarrStreamChunkWriter(path, overwrite=False, query_id="ckpt-A", version=3)
@@ -1037,9 +1030,8 @@ def test_pyds_stream_writer_v3_mode_grow_only(tmp_path):
     meta = read_zarr_v3_meta(path)
     with open(os.path.join(path, "c", "1", "0"), "rb") as fh:
         blob = fh.read()
-    block = np.frombuffer(
-        _decode_chain(blob, meta["codecs"]), dtype=meta["dtype"]
-    ).reshape(meta["chunks"])
+    block = V3().decode_chunk(meta, blob)
+    assert block.dtype == meta["dtype"] and list(block.shape) == meta["chunks"]
     assert list(block[2]) == [52.0, 1.5]
     assert list(block[3]) == [0.0, 0.0]  # frozen tail padding
 
@@ -1051,13 +1043,12 @@ def test_pyds_writers_reject_v3_destination(spark, tmp_path):
         ZarrChunkWriter,
         ZarrStreamChunkWriter,
     )
-    from single_cell_experiments_spark.sources.zarrv3 import write_zarr_v3_group
 
     e = spark.createDataFrame(
         [(i, [1.0, 2.0]) for i in range(4)], "vec_id long, embedding array<float>"
     )
     store = str(tmp_path / "v3w")
-    write_zarr_v3_group(e, store)
+    write_zarr_group(e, store, V3())
     xdir = os.path.join(store, "X")
     with pytest.raises(ValueError, match="V3 store"):
         ZarrChunkWriter(xdir, overwrite=True)
@@ -1070,7 +1061,6 @@ def test_pyds_stream_writer_rejects_foreign_query_low_batchid(tmp_path):
     at 0) writing to a store owned by another query must raise loudly — the
     old guard silently swept its first batches as 'replays'."""
     from single_cell_experiments_spark.sources.pyds import ZarrStreamChunkWriter
-    from single_cell_experiments_spark.sources.zarrv2 import ROWS_PER_CHUNK
 
     path = str(tmp_path / "arr")
     a = ZarrStreamChunkWriter(path, overwrite=False, query_id="ckpt-A")
@@ -1100,8 +1090,6 @@ def test_pyds_stream_writer_rejects_foreign_query_low_batchid(tmp_path):
         iter([_rb([(2 * ROWS_PER_CHUNK + r, [r, 3.0]) for r in range(3)])])
     )
     b.commit([mb2], batchId=2)
-    from single_cell_experiments_spark.sources.zarrv2 import read_zarray_meta
-
     assert read_zarray_meta(path)["shape"] == [2 * ROWS_PER_CHUNK + 3, 2]
 
 
@@ -1114,10 +1102,6 @@ def test_pyds_stream_writer_crashed_publish_replays_idempotently(tmp_path):
     from single_cell_experiments_spark.sources.pyds import (
         _STREAM_STATE,
         ZarrStreamChunkWriter,
-    )
-    from single_cell_experiments_spark.sources.zarrv2 import (
-        ROWS_PER_CHUNK,
-        read_zarray_meta,
     )
 
     path = str(tmp_path / "arr")
@@ -1177,62 +1161,62 @@ def test_pyds_writer_rejects_duplicate_row_ids(tmp_path):
         w.write(iter([_rb([(0, [1.0, 1.0]), (0, [9.0, 9.0]), (2, [2.0, 2.0]), (3, [3.0, 3.0])])]))
 
 
-# --- consolidated metadata (.zmetadata) ---------------------------------------
+# --- consolidated metadata, both formats ----------------------------------------
 
 
-def _tiny_group(spark, tmp_path):
-    from single_cell_experiments_spark.sources.zarrv2 import write_zarr_group
-
+def _tiny_group(spark, tmp_path, fmt):
     rows = [(i, [float(i), float(i) + 0.5]) for i in range(10)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     store = str(tmp_path / "grp")
-    write_zarr_group(df, store, rows_per_chunk=4)
+    write_zarr_group(df, store, fmt, rows_per_chunk=4)
     return store
 
 
-def test_consolidate_metadata_matches_member_files(spark, tmp_path):
-    """.zmetadata must be the exact union of the member metadata files
-    under zarr-python's key scheme (root .zgroup, <array>/.zarray)."""
-    import json as _json
-    import os as _os
+@pytest.mark.parametrize("fmt", FORMATS)
+def test_consolidate_metadata_matches_member_files(spark, tmp_path, fmt):
+    """The consolidated map must be the exact union of the member metadata
+    documents under zarr-python's key scheme: v2 ``.zmetadata`` keyed by
+    root ``.zgroup`` + ``<array>/.zarray``; v3 child ``zarr.json``
+    documents inlined into the root group document by node path."""
+    store = _tiny_group(spark, tmp_path, fmt)
+    # member documents captured BEFORE consolidation (v3 rewrites the root)
+    members_before = {}
+    for arr in ("X", "vec_id"):
+        with open(os.path.join(store, arr, fmt.ARRAY_META)) as fh:
+            members_before[fmt.consolidated_key(arr, fmt.ARRAY_META)] = json.load(fh)
 
-    from single_cell_experiments_spark.sources.zarrv2 import (
-        consolidate_metadata,
-        read_consolidated_meta,
-    )
-
-    store = _tiny_group(spark, tmp_path)
     doc = consolidate_metadata(store)
-    assert doc["zarr_consolidated_format"] == 1
+    md = fmt.read_consolidated(store)
+    if isinstance(fmt, V2):
+        assert doc["zarr_consolidated_format"] == 1
+        assert set(md) == {".zgroup", "X/.zarray", "vec_id/.zarray"}
+        for key in md:
+            with open(os.path.join(store, key)) as fh:
+                assert md[key] == json.load(fh), key
+        assert {k: md[k] for k in members_before} == members_before
+    else:
+        cm = doc["consolidated_metadata"]
+        assert cm["kind"] == "inline" and cm["must_understand"] is False
+        assert md == members_before
+        # root stays a valid, still-openable group document
+        with open(os.path.join(store, "zarr.json")) as fh:
+            again = json.load(fh)
+        assert again["node_type"] == "group" and again["zarr_format"] == 3
 
-    md = read_consolidated_meta(store)
-    assert set(md) == {".zgroup", "X/.zarray", "vec_id/.zarray"}
-    for key in md:
-        with open(_os.path.join(store, key)) as fh:
-            assert md[key] == _json.load(fh), key
 
-
-def test_consolidated_read_never_opens_member_zarray(spark, tmp_path):
-    """Exclusivity: delete every member .zarray from a consolidated copy —
-    the consolidated readers still decode the store bit-exactly, while the
-    per-array path (correctly) fails."""
-    import os as _os
-
-    from single_cell_experiments_spark.sources.zarrv2 import (
-        consolidate_metadata,
-        read_zarr_matrix,
-        read_zarr_matrix_consolidated,
-        read_zarr_vector_consolidated,
-    )
-
-    store = _tiny_group(spark, tmp_path)
+@pytest.mark.parametrize("fmt", FORMATS)
+def test_consolidated_read_never_opens_member_documents(spark, tmp_path, fmt):
+    """Exclusivity: delete every member metadata document from a
+    consolidated copy — the consolidated readers still decode the store
+    bit-exactly, while the per-array path (correctly) fails."""
+    store = _tiny_group(spark, tmp_path, fmt)
     consolidate_metadata(store)
     before = {
         (r.row, r.col0, tuple(r["values"]))
         for r in read_zarr_matrix_consolidated(spark, store, "X").collect()
     }
     for arr in ("X", "vec_id"):
-        _os.remove(_os.path.join(store, arr, ".zarray"))
+        os.remove(os.path.join(store, arr, fmt.ARRAY_META))
 
     after = {
         (r.row, r.col0, tuple(r["values"]))
@@ -1248,38 +1232,107 @@ def test_consolidated_read_never_opens_member_zarray(spark, tmp_path):
         read_zarr_matrix(spark, os.path.join(store, "X"))
 
 
-def test_consolidated_rejects_unknown_container_version(spark, tmp_path):
-    from single_cell_experiments_spark.sources.zarrv2 import (
-        consolidate_metadata,
-        read_consolidated_meta,
-    )
-
-    store = _tiny_group(spark, tmp_path)
-    consolidate_metadata(store)
-    p = os.path.join(store, ".zmetadata")
-    doc = json.loads(open(p).read())
+def _bump_container_version(doc):
     doc["zarr_consolidated_format"] = 2
+
+
+def _external_kind(doc):
+    doc["consolidated_metadata"]["kind"] = "external"
+
+
+@pytest.mark.parametrize(
+    "fmt, unconsolidated, unconsolidated_match, root, mutate, match",
+    [
+        pytest.param(
+            V2(), FileNotFoundError, "zmetadata", ".zmetadata",
+            _bump_container_version, "zarr_consolidated_format", id="v2",
+        ),
+        pytest.param(
+            V3(), KeyError, "no consolidated_metadata", "zarr.json",
+            _external_kind, "kind", id="v3",
+        ),
+    ],
+)
+def test_consolidated_rejects_unknown_layout(
+    spark, tmp_path, fmt, unconsolidated, unconsolidated_match, root, mutate, match
+):
+    """An unconsolidated group has no consolidated map, and a consolidated
+    layout we did not implement against (v2 container version, v3 kind)
+    is refused instead of silently reinterpreted."""
+    store = _tiny_group(spark, tmp_path, fmt)
+    with pytest.raises(unconsolidated, match=unconsolidated_match):
+        fmt.read_consolidated(store)
+
+    consolidate_metadata(store)
+    p = os.path.join(store, root)
+    doc = json.loads(open(p).read())
+    mutate(doc)
     open(p, "w").write(json.dumps(doc))
-    with pytest.raises(ValueError, match="zarr_consolidated_format"):
-        read_consolidated_meta(store)
+    with pytest.raises(ValueError, match=match):
+        fmt.read_consolidated(store)
 
 
-def test_consolidated_guards_match_per_array_guards(spark, tmp_path):
-    """A filters-bearing array must be refused identically through both
-    metadata sources (same dict, same refusal)."""
-    from single_cell_experiments_spark.sources.zarrv2 import (
-        consolidate_metadata,
-        read_zarr_matrix_consolidated,
-    )
-
-    store = _tiny_group(spark, tmp_path)
-    zp = os.path.join(store, "X", ".zarray")
-    meta = json.loads(open(zp).read())
+def _add_filters(meta):
     meta["filters"] = [{"id": "delta"}]
+
+
+def _rectilinear_grid(meta):
+    meta["chunk_grid"]["name"] = "rectilinear"
+
+
+@pytest.mark.parametrize(
+    "fmt, mutate, match",
+    [
+        pytest.param(V2(), _add_filters, "filters", id="v2"),
+        pytest.param(V3(), _rectilinear_grid, "chunk grid", id="v3"),
+    ],
+)
+def test_consolidated_guards_match_per_array_guards(spark, tmp_path, fmt, mutate, match):
+    """An unsupported construct must be refused identically through both
+    metadata sources (same document, same validator, same refusal)."""
+    store = _tiny_group(spark, tmp_path, fmt)
+    zp = os.path.join(store, "X", fmt.ARRAY_META)
+    meta = json.loads(open(zp).read())
+    mutate(meta)
     open(zp, "w").write(json.dumps(meta))
     consolidate_metadata(store)
-    with pytest.raises(NotImplementedError, match="filters"):
+    with pytest.raises(NotImplementedError, match=match):
         read_zarr_matrix_consolidated(spark, store, "X")
+
+
+# --- dense-id guards of the positional writers, both formats ----------------------
+
+
+@pytest.mark.parametrize("fmt", FORMATS)
+def test_group_writer_rejects_duplicate_ids(spark, tmp_path, fmt):
+    """ids {0,1,1,3} satisfy count == max+1, but the store would get a
+    zero-filled row 2 and a last-write-wins row 1: the writer must refuse."""
+    rows = [(i, [float(i), 1.0]) for i in (0, 1, 1, 3)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="dense 0..n-1"):
+        write_zarr_group(df, str(tmp_path / "dup"), fmt)
+    # documents are written after the chunk pass: nothing readable is left
+    with pytest.raises(FileNotFoundError):
+        read_zarr_matrix(spark, str(tmp_path / "dup" / "X"))
+
+
+@pytest.mark.parametrize("fmt", FORMATS)
+def test_obsm_writer_rejects_gapped_ids(spark, tmp_path, fmt):
+    """ids {0,1,3} with n_rows=3 satisfy count == n_rows, but row 3 would
+    land in edge padding and row 2 read back as zeros: refuse.  A frame
+    with one row per cell at dense ids is accepted."""
+    vals = lambda ids: spark.createDataFrame(  # noqa: E731
+        [(i, [float(i), 0.5]) for i in ids], "row_id long, values array<double>"
+    )
+    with pytest.raises(ValueError, match="dense 0..n-1"):
+        write_zarr_obsm_member(vals([0, 1, 3]), str(tmp_path / "gap"), 3, fmt)
+    with pytest.raises(ValueError, match="dense 0..n-1"):
+        write_zarr_obsm_member(vals([0, 1, 1]), str(tmp_path / "dup"), 3, fmt)
+    info = write_zarr_obsm_member(vals([0, 1, 2]), str(tmp_path / "ok"), 3, fmt)
+    assert info["shape"] == [3, 2]
+    back = read_zarr_matrix(spark, str(tmp_path / "ok")).collect()
+    got = {r.row: list(r["values"]) for r in back}
+    assert got == {i: [float(i), 0.5] for i in range(3)}
 
 
 def test_append_rows_merges_boundary_and_leaves_history_untouched(spark, tmp_path):
@@ -1292,20 +1345,14 @@ def test_append_rows_merges_boundary_and_leaves_history_untouched(spark, tmp_pat
     import numpy as np
     import pytest
 
-    from single_cell_experiments_spark.sources.zarrv2 import (
-        append_zarr_rows,
-        read_zarr_matrix,
-        read_zarr_vector,
-        write_zarr_group,
-        zarr_matrix_coo,
-    )
+    from single_cell_experiments_spark.sources.zarr import append_zarr_rows, zarr_matrix_coo
 
     def frame(lo, hi, dim=3):
         rows = [(i, [float(i) + j / 10.0 for j in range(dim)]) for i in range(lo, hi)]
         return spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<FLOAT>")
 
     store = str(tmp_path / "grow")
-    write_zarr_group(frame(0, 70), store)  # chunks 0 (full) + 1 (6 rows)
+    write_zarr_group(frame(0, 70), store, V2())  # chunks 0 (full) + 1 (6 rows)
     c0 = open(os.path.join(store, "X", "0.0"), "rb").read()
     info = append_zarr_rows(frame(70, 150), store)
     assert info == {"shape": [150, 3], "chunks": [64, 3], "appended": 80}

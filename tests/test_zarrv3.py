@@ -2,6 +2,7 @@
 pattern: byte-level fixtures written from the public zarr-specs v3.0
 document, independent of our own writer, anchored by published test
 vectors), plus writer↔reader roundtrips and unsupported-construct guards.
+The consolidated-metadata tests run over both formats in ``test_zarr.py``.
 """
 
 from __future__ import annotations
@@ -14,13 +15,14 @@ import struct
 import numpy as np
 import pytest
 
-from single_cell_experiments_spark.sources.zarrv3 import (
-    crc32c,
-    read_zarr_v3_matrix,
-    read_zarr_v3_meta,
-    read_zarr_v3_vector,
-    write_zarr_v3_group,
+from single_cell_experiments_spark.sources.zarr import (
+    read_zarr_matrix,
+    read_zarr_vector,
+    write_zarr_group,
 )
+from single_cell_experiments_spark.sources.zarrv3 import V3, crc32c
+
+read_zarr_v3_meta = V3().read_meta
 
 
 # --- crc32c: published vectors -------------------------------------------------
@@ -75,7 +77,7 @@ def test_1d_bigendian_gzip_v2keys_handbuilt(spark, tmp_path):
     for i, pair in enumerate([(10, 11), (12, 13), (14, 0)]):
         _write(root, str(i), gzip.compress(struct.pack(">2q", *pair), 5))
     got = {
-        r.row: r.value for r in read_zarr_v3_vector(spark, root).collect()
+        r.row: r.value for r in read_zarr_vector(spark, root).collect()
     }
     assert got == {0: 10, 1: 11, 2: 12, 3: 13, 4: 14}  # pad trimmed
 
@@ -99,7 +101,7 @@ def test_2d_float32_crc32c_default_keys_handbuilt(spark, tmp_path):
     _write(root, "c/1/0", c10 + crc32c(c10).to_bytes(4, "little"))
     rows = {
         r.row: list(r.values)
-        for r in read_zarr_v3_matrix(spark, root).collect()
+        for r in read_zarr_matrix(spark, root).collect()
     }
     assert rows == {0: [1.5, 2.5], 1: [3.5, 4.5], 2: [5.5, 6.5]}
 
@@ -117,7 +119,7 @@ def test_corrupted_crc32c_rejected(spark, tmp_path):
     bad = (crc32c(payload) ^ 1).to_bytes(4, "little")
     _write(root, "c/0", payload + bad)
     with pytest.raises(Exception, match="crc32c mismatch"):
-        read_zarr_v3_vector(spark, root).collect()
+        read_zarr_vector(spark, root).collect()
 
 
 def test_unsupported_constructs_named(tmp_path):
@@ -173,7 +175,7 @@ def test_identity_transpose_and_nan_fill_accepted(tmp_path, spark):
     _write(root, "c/0", struct.pack("<2d", 0.25, -0.75))
     meta = read_zarr_v3_meta(root)
     assert np.isnan(meta["fill_value"])
-    got = {r.row: r.value for r in read_zarr_v3_vector(spark, root).collect()}
+    got = {r.row: r.value for r in read_zarr_vector(spark, root).collect()}
     assert got == {0: 0.25, 1: -0.75}
 
 
@@ -192,11 +194,11 @@ def test_v3_write_read_roundtrip_blosc(spark, tmp_path):
         pd.DataFrame({"vec_id": np.arange(n), "embedding": list(map(list, emb))})
     )
     root = str(tmp_path / "store")
-    info = write_zarr_v3_group(df, root, rows_per_chunk=4, cols_per_chunk=3)
+    info = write_zarr_group(df, root, V3(), rows_per_chunk=4, cols_per_chunk=3)
     assert info["shape"] == [n, dim]
     assert info["n_chunks"] == 3 * 2  # ceil(10/4) x ceil(5/3)
-    x = read_zarr_v3_matrix(spark, os.path.join(root, "X"))
-    ids = read_zarr_v3_vector(spark, os.path.join(root, "vec_id"))
+    x = read_zarr_matrix(spark, os.path.join(root, "X"))
+    ids = read_zarr_vector(spark, os.path.join(root, "vec_id"))
     assert {r.row: r.value for r in ids.collect()} == {i: i for i in range(n)}
     from collections import defaultdict
 
@@ -261,7 +263,7 @@ def test_sharded_1d_handbuilt_footer_index_and_missing_chunk(spark, tmp_path):
     miss = (1 << 64) - 1
     c1a = struct.pack("<2i", 14, 15)
     _write(root, "c/1", c1a + _index([(0, 8), (miss, miss)]))
-    got = {r.row: r.value for r in read_zarr_v3_vector(spark, root).collect()}
+    got = {r.row: r.value for r in read_zarr_vector(spark, root).collect()}
     # rows 0-5; rows 4,5 come from shard 1 inner 0; the absent inner chunk
     # covers rows 6,7 which the shape trims anyway
     assert got == {0: 10, 1: 11, 2: 12, 3: 13, 4: 14, 5: 15}
@@ -280,7 +282,7 @@ def test_sharded_header_index_and_fill_visible(spark, tmp_path):
     miss = (1 << 64) - 1
     body = struct.pack("<2q", 21, 22)
     _write(root, "c/0", _index([(miss, miss), (isz, 16)], "start") + body)
-    got = {r.row: r.value for r in read_zarr_v3_vector(spark, root).collect()}
+    got = {r.row: r.value for r in read_zarr_vector(spark, root).collect()}
     assert got == {0: 99, 1: 99, 2: 21, 3: 22}
 
 
@@ -294,7 +296,7 @@ def test_sharded_corrupt_index_crc_rejected(spark, tmp_path):
     bad = raw + (crc32c(raw) ^ 5).to_bytes(4, "little")
     _write(root, "c/0", body + bad)
     with pytest.raises(Exception, match="crc32c mismatch"):
-        read_zarr_v3_vector(spark, root).collect()
+        read_zarr_vector(spark, root).collect()
 
 
 def test_sharded_guards_named(tmp_path):
@@ -350,140 +352,18 @@ def test_sharded_write_read_roundtrip_2d(spark, tmp_path):
         pd.DataFrame({"vec_id": np.arange(n), "embedding": list(map(list, emb))})
     )
     root = str(tmp_path / "shardstore")
-    write_zarr_v3_group(
-        df, root, rows_per_chunk=8, cols_per_chunk=3, shard_inner_rows=4
-    )
+    write_zarr_group(df, root, V3(shard_inner_rows=4), rows_per_chunk=8, cols_per_chunk=3)
     meta = read_zarr_v3_meta(os.path.join(root, "X"))
     assert meta["sharding"] is not None and meta["sharding"]["inner"] == [4, 3]
-    ids = read_zarr_v3_vector(spark, os.path.join(root, "vec_id"))
+    ids = read_zarr_vector(spark, os.path.join(root, "vec_id"))
     assert {r.row: r.value for r in ids.collect()} == {i: i for i in range(n)}
     from collections import defaultdict
 
     slices = defaultdict(dict)
-    for r in read_zarr_v3_matrix(spark, os.path.join(root, "X")).collect():
+    for r in read_zarr_matrix(spark, os.path.join(root, "X")).collect():
         slices[r.row][r.col0] = list(r.values)
     got = np.array(
         [sum((slices[i][c] for c in sorted(slices[i])), []) for i in range(n)],
         dtype=np.float32,
     )
     assert np.array_equal(got, emb)
-
-
-# --- consolidated metadata (inline, root zarr.json) -----------------------------
-
-
-def _tiny_v3_group(spark, tmp_path):
-    from single_cell_experiments_spark.sources.zarrv3 import write_zarr_v3_group
-
-    rows = [(i, [float(i), float(i) + 0.5]) for i in range(10)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    store = str(tmp_path / "g3")
-    write_zarr_v3_group(df, store, rows_per_chunk=4)
-    return store
-
-
-def test_v3_consolidate_inlines_member_documents(spark, tmp_path):
-    import json as _json
-    import os as _os
-
-    from single_cell_experiments_spark.sources.zarrv3 import (
-        consolidate_metadata_v3,
-        read_consolidated_meta_v3,
-    )
-
-    store = _tiny_v3_group(spark, tmp_path)
-    # member documents captured BEFORE consolidation mutates the root
-    members_before = {}
-    for arr in ("X", "vec_id"):
-        with open(_os.path.join(store, arr, "zarr.json")) as fh:
-            members_before[arr] = _json.load(fh)
-
-    root = consolidate_metadata_v3(store)
-    cm = root["consolidated_metadata"]
-    assert cm["kind"] == "inline" and cm["must_understand"] is False
-
-    md = read_consolidated_meta_v3(store)
-    assert md == members_before
-    # root stays a valid, still-openable group document
-    with open(_os.path.join(store, "zarr.json")) as fh:
-        again = _json.load(fh)
-    assert again["node_type"] == "group" and again["zarr_format"] == 3
-
-
-def test_v3_consolidated_read_never_opens_member_zarr_json(spark, tmp_path):
-    import os as _os
-
-    from single_cell_experiments_spark.sources.zarrv3 import (
-        consolidate_metadata_v3,
-        read_zarr_v3_matrix,
-        read_zarr_v3_matrix_consolidated,
-        read_zarr_v3_vector_consolidated,
-    )
-
-    store = _tiny_v3_group(spark, tmp_path)
-    consolidate_metadata_v3(store)
-    before = {
-        (r.row, r.col0, tuple(r["values"]))
-        for r in read_zarr_v3_matrix_consolidated(spark, store, "X").collect()
-    }
-    for arr in ("X", "vec_id"):
-        _os.remove(_os.path.join(store, arr, "zarr.json"))
-
-    after = {
-        (r.row, r.col0, tuple(r["values"]))
-        for r in read_zarr_v3_matrix_consolidated(spark, store, "X").collect()
-    }
-    assert after == before and len(after) == 10
-    ids = sorted(
-        r.value
-        for r in read_zarr_v3_vector_consolidated(spark, store, "vec_id").collect()
-    )
-    assert ids == list(range(10))
-
-    import pytest as _pytest
-
-    with _pytest.raises(FileNotFoundError):
-        read_zarr_v3_matrix(spark, os.path.join(store, "X"))
-
-
-def test_v3_consolidated_rejects_unknown_kind_and_unconsolidated(spark, tmp_path):
-    import json as _json
-    import pytest as _pytest
-
-    from single_cell_experiments_spark.sources.zarrv3 import (
-        consolidate_metadata_v3,
-        read_consolidated_meta_v3,
-    )
-
-    store = _tiny_v3_group(spark, tmp_path)
-    with _pytest.raises(KeyError, match="no consolidated_metadata"):
-        read_consolidated_meta_v3(store)
-
-    consolidate_metadata_v3(store)
-    p = os.path.join(store, "zarr.json")
-    doc = _json.loads(open(p).read())
-    doc["consolidated_metadata"]["kind"] = "external"
-    open(p, "w").write(_json.dumps(doc))
-    with _pytest.raises(ValueError, match="kind"):
-        read_consolidated_meta_v3(store)
-
-
-def test_v3_consolidated_guards_match_per_array_guards(spark, tmp_path):
-    """An unsupported construct must be refused identically through the
-    consolidated path (same validator, same refusal by name)."""
-    import json as _json
-    import pytest as _pytest
-
-    from single_cell_experiments_spark.sources.zarrv3 import (
-        consolidate_metadata_v3,
-        read_zarr_v3_matrix_consolidated,
-    )
-
-    store = _tiny_v3_group(spark, tmp_path)
-    zp = os.path.join(store, "X", "zarr.json")
-    meta = _json.loads(open(zp).read())
-    meta["chunk_grid"]["name"] = "rectilinear"
-    open(zp, "w").write(_json.dumps(meta))
-    consolidate_metadata_v3(store)
-    with _pytest.raises(NotImplementedError, match="chunk grid"):
-        read_zarr_v3_matrix_consolidated(spark, store, "X")

@@ -705,7 +705,8 @@ def r13_zarr_stress(args: list[str]) -> int:
 
     from single_cell_experiments_spark.session import get_spark
     from single_cell_experiments_spark.sources.pyds import read_zarr_group_coo
-    from single_cell_experiments_spark.sources.zarrv3 import write_zarr_v3_group
+    from single_cell_experiments_spark.sources.zarr import write_zarr_group
+    from single_cell_experiments_spark.sources.zarrv3 import V3
 
     k = int(args[0]) if args else 100
     src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -742,17 +743,20 @@ def r13_zarr_stress(args: list[str]) -> int:
         # per 64-row object: the task-per-object floor dominates) vs the
         # production sizing a 100 TB store would use (the same plan, the
         # object-count dial turned: tasks shrink 64×, range reads grow).
-        "coverage_64x16": {"rows_per_chunk": 64, "shard_inner_rows": 16},
-        "production_4096x256": {"rows_per_chunk": 4096, "shard_inner_rows": 256},
+        "coverage_64x16": (64, 16),
+        "production_4096x256": (4096, 256),
     }
     results = {}
-    for cname, kw in configs.items():
+    for cname, (rows_per_chunk, inner_rows) in configs.items():
         store = os.path.join(out, f"v3store_{cname}")
         shutil.rmtree(store, ignore_errors=True)
 
         u0 = _ui_totals(spark)
         t0 = time.perf_counter()
-        meta = write_zarr_v3_group(spark.read.parquet(dst), store, **kw)
+        meta = write_zarr_group(
+            spark.read.parquet(dst), store, V3(shard_inner_rows=inner_rows),
+            rows_per_chunk=rows_per_chunk,
+        )
         t_write = round(time.perf_counter() - t0, 2)
         u1 = _ui_totals(spark)
 
